@@ -2,40 +2,25 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.expr.{IastSortKey, SortedArrayIntersect, SortedCharNgrams, SortedLongIntersect, VectorDot}
+import graft.expr.Functions
 
-/** Session-extension entry point: wires the library's custom Catalyst
-  * expressions into any session via configuration —
+/** Session-extension entry point: wires every custom Catalyst expression of
+  * [[graft.expr.Functions]] into SQL via configuration —
   * `--conf spark.sql.extensions=graft.GraftExtensions` — so SQL users get
   * them without touching library code:
   * `SELECT * FROM entities ORDER BY iast_sort_key(label)`.
   *
-  * (The imperative alternatives, [[graft.expr.Iast.register]] and
-  * [[graft.expr.VectorOps.register]], inject into an already-built session;
-  * this is the declarative seam for clusters where the session is
-  * constructed by infra.)
+  * This is the only registry path; the Column helpers build the same
+  * expressions directly and need no registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    def unary(name: String, cls: Class[_], f: Expression => Expression): Unit =
-      ext.injectFunction((new FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name),
-        (children: Seq[Expression]) => f(children.head)))
-    def binary(name: String, cls: Class[_],
-        f: (Expression, Expression) => Expression): Unit =
-      ext.injectFunction((new FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name),
-        (children: Seq[Expression]) => f(children.head, children(1))))
-    unary("iast_sort_key", classOf[IastSortKey], IastSortKey(_))
-    binary("vector_dot", classOf[VectorDot], VectorDot(_, _))
-    binary("sorted_array_intersect", classOf[SortedArrayIntersect],
-      SortedArrayIntersect(_, _))
-    binary("sorted_long_intersect", classOf[SortedLongIntersect],
-      SortedLongIntersect(_, _))
-    binary("sorted_char_ngrams", classOf[SortedCharNgrams],
-      (s, n) => SortedCharNgrams(s, SortedCharNgrams.literalN(n)))
+    Functions.table.foreach { f =>
+      ext.injectFunction((new FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build))
+    }
     // predicate strengthening: levenshtein(a,b) ≤ k gains its implied O(1)
     // length band so the DP short-circuits (see EditDistanceBandRule)
     ext.injectOptimizerRule(_ => graft.plans.EditDistanceBandRule)

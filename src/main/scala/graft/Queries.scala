@@ -1155,7 +1155,6 @@ object Queries {
   private val collationQs = Seq(
     Q("q48_iast_sortkey",
       (s, d) => {
-        graft.expr.Iast.register(s)
         // rank materializes the collation ORDER into a value the oracle can
         // hash-check (the driver compare sorts rows, so bare ordering is
         // invisible to it). Global row_number = single-partition window —
@@ -2883,7 +2882,6 @@ object Queries {
         // Ranks come from windows over the per-query candidate relation;
         // both source rankings and the fusion are deterministic (ties →
         // vec_id), so the oracle replays everything.
-        graft.expr.VectorOps.register(s)
         val iv = graft.ops.Quantize.coords(T(s, d, "embeddings"))
         val sq = iv.groupBy(col("vec_id"))
           .agg(sum(col("x") * col("x")).as("ssq"))

@@ -51,20 +51,9 @@ object Iast {
     out
   }
 
-  /** Register `iast_sort_key` in the session's function registry (idempotent).
-    * Registry + `call_function` is the public seam for wiring a custom
-    * Catalyst expression into the Column API. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.classic.ClassicConversions._
-    castToImpl(spark).sessionState.functionRegistry
-      .createOrReplaceTempFunction("iast_sort_key",
-        (exprs: Seq[Expression]) => IastSortKey(exprs.head), "scala_udf")
-  }
-
-  /** Column API: `iastKey($"label")` → ArrayType(IntegerType) sort key.
-    * Requires [[register]] on the session (library entry points do this). */
-  def iastKey(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("iast_sort_key", c)
+  /** Column API: `iastKey($"label")` → ArrayType(IntegerType) sort key,
+    * built directly (works on any session, nothing registered). */
+  def iastKey(c: Column): Column = Functions("iast_sort_key", c)
 
   /** Ordering on raw strings, for driver-side sorts (small result sets). */
   implicit val keyOrdering: Ordering[String] = Ordering.by { s: String =>

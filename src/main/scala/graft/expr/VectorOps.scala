@@ -1,10 +1,10 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType}
 
 /** Native vector dot product over `array<double>` columns.
@@ -194,7 +194,7 @@ case class SortedCharNgrams(child: Expression, n: Int)
 }
 
 object SortedCharNgrams {
-  /** Resolve the `n` argument from a registration-time expression: must be a
+  /** Resolve the `n` argument from a builder argument expression: must be a
     * foldable integer literal; anything else gets a clear analysis error
     * instead of an opaque ClassCastException. */
   def literalN(e: Expression): Int = {
@@ -1138,132 +1138,51 @@ object SimHash60 {
   }
 }
 
+/** Column API over the expressions above (built through [[Functions]]). */
 object VectorOps {
-  /** Idempotent session registration (same seam as [[Iast.register]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.classic.ClassicConversions._
-    val reg = castToImpl(spark).sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vector_dot",
-      (exprs: Seq[Expression]) => VectorDot(exprs.head, exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_array_intersect",
-      (exprs: Seq[Expression]) => SortedArrayIntersect(exprs.head, exprs(1)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_long_intersect",
-      (exprs: Seq[Expression]) => SortedLongIntersect(exprs.head, exprs(1)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_char_ngrams",
-      (exprs: Seq[Expression]) => SortedCharNgrams(exprs.head,
-        SortedCharNgrams.literalN(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sigs",
-      (exprs: Seq[Expression]) => MinHashSigs(exprs.head,
-        SortedCharNgrams.literalN(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("sorted_word_shingles",
-      (exprs: Seq[Expression]) => SortedWordShingles(exprs.head,
-        SortedCharNgrams.literalN(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("word_ngrams",
-      (exprs: Seq[Expression]) => WordNgrams(exprs.head,
-        SortedCharNgrams.literalN(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("bigram_buckets",
-      (exprs: Seq[Expression]) => BigramBuckets(exprs.head,
-        SortedCharNgrams.literalN(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("hashed_windows",
-      (exprs: Seq[Expression]) => HashedWindows(exprs.head,
-        SortedCharNgrams.literalN(exprs(1)),
-        SortedCharNgrams.literalN(exprs(2))), "scala_udf")
-    reg.createOrReplaceTempFunction("hashed_char_ngrams",
-      (exprs: Seq[Expression]) => HashedCharNgrams(exprs.head,
-        SortedCharNgrams.literalN(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("qgram_keys",
-      (exprs: Seq[Expression]) => QGramKeys(exprs.head,
-        SortedCharNgrams.literalN(exprs(1)),
-        SortedCharNgrams.literalN(exprs(2))), "scala_udf")
-    reg.createOrReplaceTempFunction("cdc_bounds",
-      (exprs: Seq[Expression]) => CdcBounds(exprs.head,
-        SortedCharNgrams.literalN(exprs(1)),
-        SortedCharNgrams.literalN(exprs(2))), "scala_udf")
-    reg.createOrReplaceTempFunction("pass_seg_keys",
-      (exprs: Seq[Expression]) => PassSegKeys(exprs.head,
-        SortedCharNgrams.literalN(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("pass_probe_keys",
-      (exprs: Seq[Expression]) => PassProbeKeys(exprs.head,
-        SortedCharNgrams.literalN(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("word_ngram_counts",
-      (exprs: Seq[Expression]) => WordNgramCounts(exprs.head,
-        SortedCharNgrams.literalN(exprs(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("char_hist64",
-      (exprs: Seq[Expression]) => CharHist64(exprs.head), "scala_udf")
-    reg.createOrReplaceTempFunction("hist_l1",
-      (exprs: Seq[Expression]) => HistL1(exprs.head, exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash60",
-      (exprs: Seq[Expression]) => SimHash60(exprs.head), "scala_udf")
-  }
-
-  def vectorDot(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("vector_dot", a, b)
+  def vectorDot(a: Column, b: Column): Column = Functions("vector_dot", a, b)
 
   def sortedArrayIntersect(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("sorted_array_intersect", a, b)
+    Functions("sorted_array_intersect", a, b)
 
   def sortedLongIntersect(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("sorted_long_intersect", a, b)
+    Functions("sorted_long_intersect", a, b)
 
   def sortedCharNgrams(s: Column, n: Int): Column =
-    org.apache.spark.sql.functions.call_function("sorted_char_ngrams", s,
-      org.apache.spark.sql.functions.lit(n))
+    Functions("sorted_char_ngrams", s, lit(n))
 
-  def minhashSigs(arr: Column, k: Int): Column =
-    org.apache.spark.sql.functions.call_function("minhash_sigs", arr,
-      org.apache.spark.sql.functions.lit(k))
+  def minhashSigs(arr: Column, k: Int): Column = Functions("minhash_sigs", arr, lit(k))
 
   def sortedWordShingles(s: Column, n: Int): Column =
-    org.apache.spark.sql.functions.call_function("sorted_word_shingles", s,
-      org.apache.spark.sql.functions.lit(n))
+    Functions("sorted_word_shingles", s, lit(n))
 
-  def wordNgrams(s: Column, n: Int): Column =
-    org.apache.spark.sql.functions.call_function("word_ngrams", s,
-      org.apache.spark.sql.functions.lit(n))
+  def wordNgrams(s: Column, n: Int): Column = Functions("word_ngrams", s, lit(n))
 
   def bigramBuckets(s: Column, buckets: Int): Column =
-    org.apache.spark.sql.functions.call_function("bigram_buckets", s,
-      org.apache.spark.sql.functions.lit(buckets))
+    Functions("bigram_buckets", s, lit(buckets))
 
   def hashedWindows(s: Column, winLen: Int, stride: Int): Column =
-    org.apache.spark.sql.functions.call_function("hashed_windows", s,
-      org.apache.spark.sql.functions.lit(winLen),
-      org.apache.spark.sql.functions.lit(stride))
+    Functions("hashed_windows", s, lit(winLen), lit(stride))
 
   def hashedCharNgrams(s: Column, n: Int): Column =
-    org.apache.spark.sql.functions.call_function("hashed_char_ngrams", s,
-      org.apache.spark.sql.functions.lit(n))
+    Functions("hashed_char_ngrams", s, lit(n))
 
   def qgramKeys(s: Column, q: Int, minLen: Int): Column =
-    org.apache.spark.sql.functions.call_function("qgram_keys", s,
-      org.apache.spark.sql.functions.lit(q),
-      org.apache.spark.sql.functions.lit(minLen))
+    Functions("qgram_keys", s, lit(q), lit(minLen))
 
-  def passSegKeys(s: Column, d: Int): Column =
-    org.apache.spark.sql.functions.call_function("pass_seg_keys", s,
-      org.apache.spark.sql.functions.lit(d))
+  def passSegKeys(s: Column, d: Int): Column = Functions("pass_seg_keys", s, lit(d))
 
-  def passProbeKeys(s: Column, d: Int): Column =
-    org.apache.spark.sql.functions.call_function("pass_probe_keys", s,
-      org.apache.spark.sql.functions.lit(d))
+  def passProbeKeys(s: Column, d: Int): Column = Functions("pass_probe_keys", s, lit(d))
 
   def wordNgramCounts(s: Column, n: Int): Column =
-    org.apache.spark.sql.functions.call_function("word_ngram_counts", s,
-      org.apache.spark.sql.functions.lit(n))
+    Functions("word_ngram_counts", s, lit(n))
 
-  def charHist64(s: Column): Column =
-    org.apache.spark.sql.functions.call_function("char_hist64", s)
+  def charHist64(s: Column): Column = Functions("char_hist64", s)
 
-  def histL1(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("hist_l1", a, b)
+  def histL1(a: Column, b: Column): Column = Functions("hist_l1", a, b)
 
   def cdcBounds(s: Column, window: Int, mask: Int): Column =
-    org.apache.spark.sql.functions.call_function("cdc_bounds", s,
-      org.apache.spark.sql.functions.lit(window),
-      org.apache.spark.sql.functions.lit(mask))
+    Functions("cdc_bounds", s, lit(window), lit(mask))
 
-  def simhash60(arr: Column): Column =
-    org.apache.spark.sql.functions.call_function("simhash60", arr)
+  def simhash60(arr: Column): Column = Functions("simhash60", arr)
 }

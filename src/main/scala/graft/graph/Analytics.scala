@@ -322,7 +322,6 @@ object Analytics {
     * @return single row (n_triangles).
     */
   def triangleCount(edges: DataFrame): DataFrame = {
-    graft.expr.VectorOps.register(edges.sparkSession)
     // materialize once: the caller's edge relation (often a distinct over a
     // self-join) feeds the degree build AND the orientation pass
     val e = FreshCheckpoint(

@@ -63,7 +63,6 @@ object Chunking {
     // code-point substr semantics, sorted-distinct by construction)
     // instead of an interpreted transform/filter HOF chain instantiating
     // an md5+hex+conv expression tree per character position.
-    graft.expr.VectorOps.register(docs.sparkSession)
     val bounds = graft.expr.VectorOps.cdcBounds(col("text"), window, mask)
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"), col("text"), bounds.as("b"))

@@ -333,12 +333,15 @@ object Classifier {
       .join(units.select(col("doc_id"), col("mu")), Seq("doc_id"))
       .groupBy(col("c"), col("k"))
       .agg(sum(expr("2 * na * nb div (mu - 1)")).as("o2x"))
-    // the δ table over ALL ranked pairs (marginal products included)
+    // the δ table over ALL ranked pairs (marginal products included);
+    // bins() caps categories at 4, so the broadcast side has ≤ 4 rows and δ
+    // ≤ 16 — a plain cross would plan a CartesianProduct past the
+    // broadcast threshold's size estimate
     val x = ncum.select(col("cat").as("c"), col("nc").as("nc_c"),
       col("ncm").as("ncm_c"))
     val y = ncum.select(col("cat").as("k"), col("nc").as("nc_k"),
       col("ncm").as("ncm_k"))
-    val delta = x.crossJoin(y).filter(col("c") < col("k"))
+    val delta = x.join(broadcast(y), col("c") < col("k"))
       .select(col("c"), col("k"), (col("nc_c") * col("nc_k")).as("nprod"),
         (lit(2L) * col("ncm_k") - lit(2L) * col("ncm_c") + col("nc_c")
           - col("nc_k")).as("d2x"))

@@ -74,7 +74,6 @@ object Dedup {
     * dominant per-row cost. Sorted so the verify stage can merge-intersect
     * natively. May be empty (short doc). */
   def shingleArrays(docs: DataFrame, n: Int = 3): DataFrame = {
-    graft.expr.VectorOps.register(docs.sparkSession)
     docs.select(col("doc_id"),
       graft.expr.VectorOps.sortedWordShingles(col("text"), n).as("arr"))
   }
@@ -97,7 +96,6 @@ object Dedup {
     * no shingles produced no group (an empty doc must NOT band-collide with
     * other empty docs on a constant null-band key). */
   def minhashSignatures(docs: DataFrame, numHashes: Int): DataFrame = {
-    graft.expr.VectorOps.register(docs.sparkSession)
     shingleArrays(fanOut(docs)).filter(size(col("arr")) > 0)
       .select(col("doc_id") +: minhashCols(col("arr"), numHashes): _*)
   }
@@ -114,7 +112,6 @@ object Dedup {
       numHashes: Int = 8,
       rowsPerBand: Int = 2,
       threshold: Double = 0.8): DataFrame = {
-    graft.expr.VectorOps.register(docs.sparkSession)
     val numBands = numHashes / rowsPerBand
     // Checkpoint the NARROW signature table only (one row per doc,
     // doc_id + k hex strings; the band union reads it numBands times and
@@ -156,7 +153,6 @@ object Dedup {
     */
   def pairEvidence(docs: DataFrame, numHashes: Int = 8,
       rowsPerBand: Int = 2, threshold: Double = 0.8): DataFrame = {
-    graft.expr.VectorOps.register(docs.sparkSession)
     val numBands = numHashes / rowsPerBand
     val base = FreshCheckpoint(minhashSignatures(docs, numHashes))
     val bandRows = bandedKeys(base, numBands, rowsPerBand)
@@ -554,7 +550,6 @@ object Dedup {
     * the dimension threshold, same pattern as ngramJaccard's verify. */
   private def verifyJaccardArrays(
       arrays: DataFrame, cand: DataFrame, threshold: Double): DataFrame = {
-    graft.expr.VectorOps.register(arrays.sparkSession)
     val hint: DataFrame => DataFrame =
       if (arrays.count() <= graft.Limits.dimensionRows) broadcast(_) else identity
     val ga = arrays.select(col("doc_id").as("a"), col("arr").as("arrA"))
@@ -597,7 +592,6 @@ object Dedup {
     * off-heap/disk-only storage.
     */
   def ngramJaccard(docs: DataFrame, n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    graft.expr.VectorOps.register(docs.sparkSession)
     // Shuffle plan (round 1 paid THREE wide shuffles of the exploded gram
     // relation; round 2 ONE; this pays NONE): the per-doc sorted gram array
     // is computed by the native sorted_char_ngrams expression per ROW — the
@@ -693,7 +687,6 @@ object Dedup {
     * (one array of longs per doc, no exploded span strings).
     */
   def repeatedSpans(docs: DataFrame, spanLen: Int = 64, stride: Int = 16): DataFrame = {
-    graft.expr.VectorOps.register(docs.sparkSession)
     val spans = fanOut(docs).filter(length(col("text")) >= spanLen)
       .select(col("doc_id"),
         // r13: one native digest-reusing pass ([[graft.expr.HashedWindows]]
@@ -743,7 +736,6 @@ object Dedup {
     */
   def duplicatedExtents(docs: DataFrame, spanLen: Int = 64,
       stride: Int = 16): DataFrame = {
-    graft.expr.VectorOps.register(docs.sparkSession)
     val spans = fanOut(docs).filter(length(col("text")) >= spanLen)
       .select(col("doc_id"),
         posexplode(graft.expr.VectorOps.hashedWindows(col("text"), spanLen,
@@ -830,7 +822,6 @@ object Dedup {
     // old tokens() explode → 60 conditional-sum aggregation, which shuffled
     // the token stream and ran 60 agg columns); empty-token docs drop like
     // the aggregation form's empty groups did.
-    graft.expr.VectorOps.register(docs.sparkSession)
     fanOut(docs).select(col("doc_id"),
         graft.expr.VectorOps.simhash60(
           graft.expr.VectorOps.sortedWordShingles(col("text"), 1)).as("simhash"))
@@ -906,7 +897,6 @@ object Dedup {
     */
   def editDistanceCandidates(df: DataFrame, id: String, str: String,
       block: Seq[String], maxDist: Int = 2): DataFrame = {
-    graft.expr.VectorOps.register(df.sparkSession)
     val base = fanOut(df).select(
       Seq(col(id).as("pk"), col(str).as("s"), length(col(str)).as("len"),
         graft.expr.VectorOps.charHist64(col(str)).as("hist")) ++
@@ -992,7 +982,6 @@ object Dedup {
     *         tie-free across engines)
     */
   def containment(docs: DataFrame, n: Int = 3, threshold: Double = 0.8): DataFrame = {
-    graft.expr.VectorOps.register(docs.sparkSession)
     val p = docs.sparkSession.sparkContext.defaultParallelism
     // grams are HASHED to the repo-standard 60-bit md5 key per row, before
     // anything joins or sorts: a long-gram stream carries ~(n+8)-byte string

@@ -52,7 +52,6 @@ object Quantize {
     * style quality metrics need. */
   private def lloydScoredTop(embeddings: DataFrame, k: Int, rounds: Int,
       topN: Int): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     // Per-row coordinate ARRAYS, not (vec_id, d, x) rows: the relational
     // assign (coords ⋈ centroids on d, then a (vec, cid) re-group) streams
     // n·k·dim rows per round — 627M at 50k vectors × 196 auto-k cells,
@@ -215,7 +214,6 @@ object Quantize {
     */
   def matryoshkaFidelity(embeddings: DataFrame, dims: Seq[Int] = Seq(8, 16, 32),
       pairStep: Int = 7): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val v = embeddings.select(col("vec_id"),
       col("embedding").cast("array<double>").as("emb"))
     val pairs = v.select(col("vec_id"), col("emb").as("ea"))
@@ -270,7 +268,6 @@ object Quantize {
     val dimR = resolveDim(embeddings, dim)
     require(dimR % m == 0, s"dim $dimR not divisible by m=$m")
     val subDim = dimR / m
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     // r13 optimization: array-space training (the [[ivfPqIndex]] helpers —
     // exact integer dots, min-struct argmins; same integers as the old
     // per-dim join + window formulation)
@@ -378,7 +375,6 @@ object Quantize {
     * arithmetic is EXACTLY the per-dim integer math ([[lloydScoredTop]]'s
     * discipline). */
   private def vecArrays(embeddings: DataFrame): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     Dedup.fanOut(embeddings).select(col("vec_id"),
         transform(col("embedding"),
           v => floor(v.cast("double") * 1000000d).cast("double")).as("xs"))
@@ -446,7 +442,6 @@ object Quantize {
     val dimR = resolveDim(embeddings, dim)
     require(dimR % m == 0, s"dim $dimR not divisible by m=$m")
     val subDim = dimR / m
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val nVecs = Similarity.corpusCount(embeddings)
     if (nVecs > 0 && nVecs <= localCutoff)
       return ivfPqIndexLocal(embeddings, nCells, m, k, rounds, subDim)
@@ -744,7 +739,6 @@ object Quantize {
     */
   def ivfPqEncode(corpus: DataFrame, coarse: DataFrame, cents: DataFrame,
       subDim: Int): DataFrame = {
-    graft.expr.VectorOps.register(corpus.sparkSession)
     // r13 optimization: array-space encode (the [[ivfPqIndex]] helpers —
     // exact integer dots, min-struct argmins; same integers as the old
     // per-dim join + window formulation)
@@ -791,7 +785,6 @@ object Quantize {
     *         max_cell_drift)
     */
   def ivfPqStaleness(idx: IvfPqIndex, corpus: DataFrame): DataFrame = {
-    graft.expr.VectorOps.register(corpus.sparkSession)
     // r13 optimization: current-encoding recompute in ARRAY space (the
     // [[ivfPqIndex]] helpers — exact integer dots, min-struct argmins, the
     // same integers as the old per-dim join + window formulation)
@@ -1018,7 +1011,6 @@ object Quantize {
       rounds: Int = 2, nprobe: Int = 2, nQueries: Int = 5, topK: Int = 10,
       dim: Int = 0,
       localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     // r14: below the dimension gate the WHOLE drift series replays
     // driver-local — the r13 round had already made the training
     // driver-local under this gate and decomposed the per-step work, but

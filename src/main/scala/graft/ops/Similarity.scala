@@ -20,8 +20,7 @@ object Similarity {
   /** Σ aᵢbᵢ via the native [[graft.expr.VectorDot]] expression. Spark's
     * higher-order-function formulation (aggregate ∘ zip_with) is interpreted
     * with per-element boxing — ~100× slower on O(pairs) join paths (see
-    * VectorOps scaladoc); requires [[graft.expr.VectorOps.register]], which
-    * every public entry point here performs. */
+    * VectorOps scaladoc). */
   def dot(a: Column, b: Column): Column =
     graft.expr.VectorOps.vectorDot(a, b)
 
@@ -37,7 +36,6 @@ object Similarity {
     *         on vec_id.
     */
   def cosineTopK(embeddings: DataFrame, queries: DataFrame, k: Int = 10): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     // fanOut: a small parquet corpus arrives as one partition, serializing
     // the O(corpus × queries) scoring stage on a single core
     val corpus = Dedup.fanOut(embeddings).select(col("vec_id"),
@@ -82,7 +80,6 @@ object Similarity {
     */
   def mmrTopK(embeddings: DataFrame, queries: DataFrame, k: Int = 5,
       poolSize: Int = 16, lambdaU: Long = 700000L): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val pool = FreshCheckpoint(cosineTopK(embeddings, queries, poolSize)
       .select(col("query_id"), col("vec_id"),
         round(col("cos") * 1000000d).cast("long").as("rel_u")))
@@ -127,7 +124,6 @@ object Similarity {
     * rounds, all bounded by |queries| · poolSize. */
   private def mmrFromPool(embeddings: DataFrame, pool: DataFrame, k: Int,
       lambdaU: Long): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val il = 1000000L - lambdaU
     val embD = embeddings.select(col("vec_id"),
         col("embedding").cast("array<double>").as("emb"))
@@ -194,7 +190,6 @@ object Similarity {
       nCentroids: Int = 16,
       k: Int = 10,
       nprobe: Int = 1): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val corpus = Dedup.fanOut(embeddings).select(col("vec_id"),
         col("embedding").cast("array<double>").as("emb"))
       .withColumn("nrm", norm(col("emb")))
@@ -273,7 +268,6 @@ object Similarity {
       nPlanes: Int = 6,
       dim: Int = 64,
       k: Int = 10): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val planes = planeVectors(nPlanes, dim)
     def sig(emb: Column): Column = {
       // integerized embedding: values are whole numbers ≤ ~1e6·|v|, products
@@ -395,7 +389,6 @@ object Similarity {
   def multiprobeTopK(embeddings: DataFrame, queries: DataFrame,
       nPlanes: Int = 6, nProbe: Int = 2, dim: Int = 64,
       k: Int = 10): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val planes = planeVectors(nPlanes, dim)
     val corpus = Dedup.fanOut(embeddings).select(col("vec_id"),
         col("embedding").cast("array<double>").as("emb"))
@@ -433,7 +426,6 @@ object Similarity {
   def multiprobeRecall(embeddings: DataFrame,
       nProbes: Seq[Int] = Seq(1, 2, 4), nPlanes: Int = 6, dim: Int = 64,
       k: Int = 10, nQueries: Int = 5): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val planes = planeVectors(nPlanes, dim)
     val queries = embeddings.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding"))
@@ -500,7 +492,6 @@ object Similarity {
   def multiprobeNdcg(embeddings: DataFrame,
       nProbes: Seq[Int] = Seq(1, 2, 4), nPlanes: Int = 6, dim: Int = 64,
       k: Int = 10, nQueries: Int = 5): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val planes = planeVectors(nPlanes, dim)
     val queries = embeddings.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding"))
@@ -585,7 +576,6 @@ object Similarity {
   def multiprobeFrontier(embeddings: DataFrame,
       planesCounts: Seq[Int] = Seq(4, 6, 8), nProbes: Seq[Int] = Seq(1, 2, 4),
       dim: Int = 64, k: Int = 10, nQueries: Int = 5): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val queries = embeddings.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding"))
     val exact = FreshCheckpoint(cosineTopK(embeddings, queries, k)
@@ -662,7 +652,6 @@ object Similarity {
     * a 3× saving), so the per-pair work is a single dot product.
     * Returns (a, b, cos), a < b. */
   def bucketedNearDups(embeddings: DataFrame, threshold: Double = 0.95): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val e = Dedup.fanOut(embeddings).select(col("label"), col("vec_id"),
         col("embedding").cast("array<double>").as("emb"))
       .withColumn("nrm", norm(col("emb")))
@@ -732,7 +721,6 @@ object Similarity {
     */
   def hyperplaneCells(embeddings: DataFrame, nPlanes: Int,
       dim: Int = 64): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val planes = planeVectors(nPlanes, dim)
     val iv = Dedup.fanOut(embeddings).select(col("vec_id"),
       transform(col("embedding"),
@@ -939,7 +927,6 @@ object Similarity {
     * size). Extracted verbatim from cellKnn — identical plan. */
   private def cellScored(embeddings: DataFrame, cellK: Int,
       rounds: Int): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val cells =
       if (cellK > 0) Quantize.kmeansCodebook(embeddings, cellK, rounds)
         .select(col("vec_id"), col("centroid").as("cell"))
@@ -1097,7 +1084,6 @@ object Similarity {
     */
   def embeddingOutliers(embeddings: DataFrame, cut: Double = 4.0,
       cellK: Int = 0, rounds: Int = 2): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val assigned = FreshCheckpoint(
       if (cellK > 0) Quantize.kmeansCodebook(embeddings, cellK, rounds)
       else {

@@ -211,7 +211,6 @@ object TextAnalysis {
     // the per-doc exchange is gone — two sizes over the named per-row gram
     // array; the filter keeps exactly the docs the old groupBy emitted
     // (≥ 1 gram)
-    graft.expr.VectorOps.register(docs.sparkSession)
     Dedup.fanOut(docs)
       .select(col("doc_id"),
         graft.expr.VectorOps.wordNgrams(col("text"), n).as("arr"))
@@ -493,7 +492,6 @@ object TextAnalysis {
     // identical gram multiset per ROW (same tokenizer semantics, same
     // single-space join), so gram construction now needs no shuffle at all;
     // the first exchange of every consumer is its own (doc, gram) rollup.
-    graft.expr.VectorOps.register(docs.sparkSession)
     Dedup.fanOut(docs).select(col("*"),
         explode(graft.expr.VectorOps.wordNgrams(col("text"), n)).as("gram"))
       .drop("text")
@@ -507,7 +505,6 @@ object TextAnalysis {
     * task. Carries any extra input columns through; docs with fewer than
     * n tokens emit nothing (exactly the rows the old rollup dropped). */
   private[ops] def tokenTfs(docs: DataFrame, n: Int): DataFrame = {
-    graft.expr.VectorOps.register(docs.sparkSession)
     Dedup.fanOut(docs).select(col("*"),
         explode(graft.expr.VectorOps.wordNgramCounts(col("text"), n))
           .as("tc"))
@@ -522,7 +519,6 @@ object TextAnalysis {
     * per-row gram array is exactly the corpus-wide distinct without its
     * exchange. */
   private[ops] def tokenGramsDistinct(docs: DataFrame, n: Int): DataFrame = {
-    graft.expr.VectorOps.register(docs.sparkSession)
     Dedup.fanOut(docs).select(col("*"),
         explode(array_distinct(
           graft.expr.VectorOps.wordNgrams(col("text"), n))).as("gram"))

@@ -1222,7 +1222,6 @@ object TrainingData {
     // zip_with/slice/concat HOF chain + per-exploded-row md5/conv/substring
     // expression tree, which ran interpreted with per-element boxing and
     // dominated every DSIR-family query's scan stage.
-    graft.expr.VectorOps.register(docs.sparkSession)
     Dedup.fanOut(docs).select(col("doc_id"), col("source"),
         explode(graft.expr.VectorOps.bigramBuckets(col("text"), buckets))
           .as("b"))

@@ -39,7 +39,6 @@ object Winnowing {
 
   /** Distinct selected fingerprints per document: (doc_id, fp). */
   def fingerprints(docs: DataFrame, k: Int = 8, w: Int = 4): DataFrame = {
-    graft.expr.VectorOps.register(docs.sparkSession)
     // r13: native digest-reusing window hashing ([[graft.expr
     // .HashedWindows]], stride 1 — same md5-prefix arithmetic) instead of
     // an interpreted per-position md5+hex+conv expression tree

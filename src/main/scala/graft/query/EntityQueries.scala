@@ -32,7 +32,6 @@ object EntityQueries {
       case "works" => entities.filter(col("type") === "work")
       case "authors" => entities.filter(col("type") === "author")
     }
-    Iast.register(entities.sparkSession)
     base.select(col("id"), labelCol.as("label"))
       .orderBy(Iast.iastKey(col("label")))
   }

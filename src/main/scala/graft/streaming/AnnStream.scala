@@ -38,7 +38,6 @@ object AnnStream {
   /** The servable layout: one row per occupied bucket, candidates packed.
     * (sig, vecs: array<struct<vec_id, emb>>) */
   def sigIndex(embeddings: DataFrame, nPlanes: Int, dim: Int): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val planes = graft.ops.Similarity.planeVectors(nPlanes, dim)
     embeddings.select(col("vec_id"),
         col("embedding").cast("array<double>").as("emb"))
@@ -82,7 +81,6 @@ object AnnStream {
       index: DataFrame, nPlanes: Int = 6, nProbe: Int = 2, dim: Int = 64,
       k: Int = 10): Dataset[AnnHit] = {
     import spark.implicits._
-    graft.expr.VectorOps.register(spark)
     val probed = probedQueries(queries, nPlanes, nProbe, dim)
     val joined = probed.join(index, Seq("sig"))
       .select(col("query_id").as("_1"), col("qemb").as("_2"),

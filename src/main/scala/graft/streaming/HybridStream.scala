@@ -73,7 +73,6 @@ object HybridStream {
     * LSH bucket, candidates packed with embeddings and token counts. */
   def denseIndex(embeddings: DataFrame, docs: DataFrame, nPlanes: Int = 6,
       dim: Int = 64): DataFrame = {
-    graft.expr.VectorOps.register(embeddings.sparkSession)
     val planes = graft.ops.Similarity.planeVectors(nPlanes, dim)
     val toks = docs.select(col("doc_id").as("vec_id"),
       graft.ops.TextAnalysis.tokenCount(col("text")).as("n_tokens"))
@@ -93,7 +92,6 @@ object HybridStream {
       nProbe: Int = 2, dim: Int = 64, topK: Int = 5, k0: Int = 60,
       fuseK: Int = 5, budgetTokens: Long = 150): Dataset[HybridHit] = {
     import spark.implicits._
-    graft.expr.VectorOps.register(spark)
     // lexical fan-out: the DISTINCT word-trigram set per arriving query
     // (qterms' distinct (query, tok) pairs), joined to the term buckets
     val lexRows = queries.select(col("query_id"), col("text"))

@@ -102,7 +102,6 @@ object IngestStream {
   def admissionDecisions(docs: DataFrame, model: DataFrame,
       knownDups: DataFrame, buckets: Int = 4096,
       thresholdU: Long = 0L): DataFrame = {
-    graft.expr.VectorOps.register(docs.sparkSession)
     val toks = filter(split(lower(col("text")), "\\s+"), x => x =!= "")
     // bigram buckets exactly as dsirFeatures — one native per-row pass
     // ([[graft.expr.BigramBuckets]]: same tokenizer walk, same md5-prefix

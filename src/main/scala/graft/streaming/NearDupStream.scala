@@ -89,7 +89,6 @@ object NearDupStream {
       numHashes: Int,
       rowsPerBand: Int): Dataset[BucketDoc] = {
     import spark.implicits._
-    graft.expr.VectorOps.register(spark)
     val numBands = numHashes / rowsPerBand
     val bandKeys = array((0 until numBands).map { b =>
       md5(concat_ws("|",

@@ -7,8 +7,8 @@ import graft.plans.EditDistanceBandRule
   * length band lands in the optimized plan, first in the conjunction), and
   * idempotent (safe under Catalyst's fixpoint runner). Injected at runtime
   * via experimentalMethods here — the declarative seam
-  * (`spark.sql.extensions=graft.GraftExtensions`) is exercised by the
-  * ExtCheck main in its own session. */
+  * (`spark.sql.extensions=graft.GraftExtensions`) is exercised by
+  * [[GraftExtensionsSpec]] in its own session. */
 class EditDistanceBandRuleSpec extends SparkTestBase {
   import spark.implicits._
 

@@ -31,7 +31,6 @@ class IastSpec extends SparkTestBase {
   }
 
   test("catalyst expression equals Scala function on entity names") {
-    Iast.register(spark)
     import spark.implicits._
     val words = golden.keys.toSeq.filter(_.nonEmpty)
     val df = words.toDF("w")

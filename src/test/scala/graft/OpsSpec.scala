@@ -316,7 +316,6 @@ class OpsSpec extends SparkTestBase {
 
   test("sorted_char_ngrams equals the relational formulation") {
     import spark.implicits._
-    graft.expr.VectorOps.register(spark)
     val texts = Seq("abcabcd", "xy", "aaa", "a", "", "héllo wörld").toDF("text")
     val native = texts.select(
       graft.expr.VectorOps.sortedCharNgrams(col("text"), 3).as("arr")).collect()
@@ -334,7 +333,6 @@ class OpsSpec extends SparkTestBase {
 
   test("sorted_word_shingles + minhash_sigs equal the composed formulations") {
     import spark.implicits._
-    graft.expr.VectorOps.register(spark)
     val texts = Seq(
       "the quick brown fox jumps over the lazy dog",
       "  leading and\ttab\nnewline   runs  ",
@@ -366,7 +364,6 @@ class OpsSpec extends SparkTestBase {
 
   test("simhash60 equals the explode + 60-vote aggregation formulation") {
     import spark.implicits._
-    graft.expr.VectorOps.register(spark)
     val texts = Seq((1L, "the quick brown fox the quick"), (2L, "alpha beta gamma"),
       (3L, "x"), (4L, "Mixed CASE mixed case"), (5L, "")).toDF("doc_id", "text")
     val native = graft.ops.Dedup.simhash(texts).collect()
@@ -390,9 +387,7 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("sorted_array_intersect: overlap, disjoint, empty, self") {
-    import spark.implicits._
-    graft.expr.VectorOps.register(spark)
-    val rows = spark.sql(
+    val rows = sqlSpark.sql(
       """SELECT
         | sorted_array_intersect(array('a','b','c'), array('b','c','d')) AS o1,
         | sorted_array_intersect(array('a','b'), array('x','y','z')) AS o2,

@@ -39,6 +39,8 @@ object PlanSweepSupport {
     *  - q129: 1-row total-token-mass scalar for the coverage cut
     *  - q136: 1-row pooled-moments scalar for the z-test
     *  - q146: 6-row category table on a size-range (non-equi) predicate
+    *  - q322: ≤4-row category table on the ordinal `c < k` predicate
+    *    (`bins()` caps categories at 4, so the δ table has ≤ 16 rows)
     */
   private val allowedBnlj = Set(
     "q38_ann_cosine_topk", "q49_ann_ivf", "q51_degree_centrality",
@@ -158,8 +160,8 @@ object PlanSweepSupport {
     // q321: the 1-row broadcast (λ map, default) gate-state attach — the
     // RagStream broadcast-index convention
     "q321_ingest_admission",
-    // q322: q303's 1-row audit attaches + the ≤|categories|²-row ordinal
-    // δ-table cross (category-dimension-sized, never corpus)
+    // q322: q303's 1-row audit attaches + the ordinal δ table, a broadcast
+    // join on c < k over ≤4 categories (≤16 rows, never corpus-sized)
     "q322_krippendorff_ordinal",
     // q323: per edit step, 1-row n_exact × n_hit × idf-gauge × edit-count
     // attaches (the q309 audit-rollup shape, once per step)

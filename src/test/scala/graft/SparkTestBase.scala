@@ -1,11 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for test suites (one per suite via lazy val). */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Isolated session built with [[GraftExtensions]]: the plain-SQL surface
+    * of the custom expressions (`spark.sql.extensions=graft.GraftExtensions`). */
+  lazy val sqlSpark: SparkSession = SparkTestBase.extended
 
   val refData = "/root/reference/data"
   val testData = "/root/testdata"
@@ -22,6 +26,19 @@ object SparkTestBase {
       .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "6g"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  lazy val extended: SparkSession = isolated(new GraftExtensions)
+
+  /** A new session on the shared SparkContext with its own function registry
+    * and conf, built with `extensions`. `create()` makes the new session the
+    * default and active one, so the shared session is put back. */
+  def isolated(extensions: SparkSessionExtensions => Unit = _ => ()): SparkSession = {
+    val shared = session
+    val s = SparkSession.builder().withExtensions(extensions).create()
+    SparkSession.setDefaultSession(shared)
+    SparkSession.setActiveSession(shared)
     s
   }
 }

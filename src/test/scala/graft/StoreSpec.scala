@@ -96,10 +96,7 @@ class StoreSpec extends SparkTestBase {
   }
 
   test("extensions-injected iast_sort_key is usable from SQL") {
-    // the shared test session was not built with the extension — inject the
-    // same binding through the imperative seam and exercise the SQL surface
-    graft.expr.Iast.register(spark)
-    val r = spark.sql(
+    val r = sqlSpark.sql(
       "SELECT iast_sort_key('kha') AS k, iast_sort_key('ka') AS k2")
       .head()
     val kha = r.getSeq[Int](0)

@@ -49,7 +49,6 @@ class OptR13Spec extends graft.SparkTestBase {
 
   test("bigram_buckets expression emits the OLD zip_with + md5/conv/pmod " +
     "chain's exact per-doc bucket multiset (DSIR feature identity)") {
-    graft.expr.VectorOps.register(spark)
     val edge = spark.createDataFrame(Seq(
       (900001L, "  leading  and\ttrailing   ws  "),
       (900002L, "one"),
@@ -77,7 +76,6 @@ class OptR13Spec extends graft.SparkTestBase {
 
   test("cdc_bounds expression emits the OLD transform/filter md5-window " +
     "chain's exact boundary arrays (chunking identity)") {
-    graft.expr.VectorOps.register(spark)
     val window = 16
     val mask = 63
     val edge = spark.createDataFrame(Seq(
@@ -106,7 +104,6 @@ class OptR13Spec extends graft.SparkTestBase {
 
   test("hashed_windows expression equals the OLD transform(sequence, " +
     "md5/conv) strided window hashing, stride 1 and 16") {
-    graft.expr.VectorOps.register(spark)
     val edge = spark.createDataFrame(Seq(
       (900001L, ""), (900002L, "below"), (900003L, "x" * 64),
       (900005L, "some longer body of text that spans multiple strided " +
@@ -129,7 +126,6 @@ class OptR13Spec extends graft.SparkTestBase {
   test("hashed_char_ngrams expression equals the OLD " +
     "array_sort(array_distinct(transform(sorted_char_ngrams, md5/conv))) " +
     "chain, gram-array for gram-array") {
-    graft.expr.VectorOps.register(spark)
     val edge = spark.createDataFrame(Seq(
       (900001L, ""), (900002L, "short"), (900003L, "exactly16charsxx"),
       (900005L, "a longer text with repeated repeated substrings inside")))
@@ -149,7 +145,6 @@ class OptR13Spec extends graft.SparkTestBase {
   test("qgram_keys expression emits the OLD posexplode + (pk, g)-window " +
     "occurrence numbering's exact key multiset, short-string sentinel " +
     "quirks included") {
-    graft.expr.VectorOps.register(spark)
     val q = 3
     val maxDist = 1
     val minLen = q * (maxDist + 1)
