@@ -66,13 +66,19 @@ object Bench {
 
     // (query_sec, gc_sec_during_query) — the gc column diagnoses environment
     // anomalies (round 1: identical commit ran 69 s locally, 1081 s on the
-    // driver box, inflation concentrated in allocation-heavy queries)
-    def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
+    // driver box, inflation concentrated in allocation-heavy queries). A
+    // failure records -1 on stdout and its cause on stderr.
+    def runOne(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
       val g0 = gcMillis()
       val t0 = System.nanoTime()
       val failed =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); false }
-        catch { case _: Throwable => true }
+        catch { case e: Throwable =>
+          System.err.println(
+            s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          true
+        }
       val sec = (System.nanoTime() - t0) / 1e9
       val gc = (gcMillis() - g0) / 1e3
       resetSessionState(sec)
@@ -100,7 +106,7 @@ object Bench {
     // execution still computes from the benched parquet inputs. Full-run
     // in-session warm-up keeps the r3-era static set (its heavy members
     // are measured in the child anyway).
-    runOne(SparkEntry.queries("q02_agg_sum_groupby"))
+    runOne("q02_agg_sum_groupby", SparkEntry.queries("q02_agg_sum_groupby"))
     val warmDir = java.nio.file.Paths.get(sfDir).toAbsolutePath
       .getParent.resolve("sf0.001")
     val onlyPre = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
@@ -258,7 +264,7 @@ object Bench {
       if (i == half && selected.size >= 8) calibMidSec = calibrate()
       heavyIsolated.get(name) match {
         case Some(iso) if iso >= 0 => name -> (iso, 0.0) // fresh-JVM timing
-        case _ => name -> runOne(fn)
+        case _ => name -> runOne(name, fn)
       }
     }
     // Round-11 (advisor): probe again AFTER the queries. A single

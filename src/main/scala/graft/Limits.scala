@@ -2,11 +2,11 @@ package graft
 
 /** The library's one scale knob: the row count below which a relation is
   * treated as dimension-sized — safe to collect for a gated driver-local
-  * algorithm (with a distributed fallback above it) or to broadcast-hint
-  * onto a join. 64k rows of ids/arrays is a few tens of MB: far below any
-  * executor/driver budget, far above every dimension table and graph the
-  * reference serves (~17k entities). Stated once so the adaptive gates and
-  * broadcast hints can't drift apart.
+  * algorithm (with a distributed fallback above it). 64k rows of ids/arrays
+  * is a few tens of MB: far below any executor/driver budget, far above
+  * every dimension table and graph the reference serves (~17k entities).
+  * Stated once so the adaptive gates can't drift apart. Join strategies
+  * are not sized here: the planner picks them from measured sizes.
   */
 object Limits {
   val dimensionRows: Long = 65536

@@ -173,10 +173,8 @@ object Analytics {
     * the reference's "  name (id) (type)". No row ever carries a whole
     * component: at 100× the reference's XL component (53% of the graph) is
     * tens of millions of members, so a per-component `collect_list` would
-    * pack a multi-GB string into one executor row. The entity attach
-    * broadcasts only when entities is dimension-sized (gate =
-    * [[graft.Limits.dimensionRows]], same pattern as the similarity ops);
-    * above it the attach is a plain shuffle equi-join. Text-block assembly
+    * pack a multi-GB string into one executor row. The entity attach is a
+    * plain equi-join whose strategy the planner sizes. Text-block assembly
     * happens only in [[renderComponentListings]], which is driver-side and
     * reference-artifact-sized by intent. */
   def componentListings(components: DataFrame, entities: DataFrame): DataFrame = {
@@ -186,10 +184,8 @@ object Analytics {
     val catted = components.groupBy($"component").agg(count(lit(1)).as("size"))
       .join(broadcast(cats), $"size" >= $"lo" && $"size" <= $"hi")
       .select($"component", $"category", $"size")
-    val hint: DataFrame => DataFrame =
-      if (entities.count() <= graft.Limits.dimensionRows) broadcast(_) else identity
     components
-      .join(hint(entities.select($"id", $"name", $"type")), Seq("id"))
+      .join(entities.select($"id", $"name", $"type"), Seq("id"))
       .select($"component", $"id",
         concat(lit("  "), $"name", lit(" ("), $"id", lit(") ("), $"type",
           lit(")")).as("line"))
@@ -654,11 +650,9 @@ object Analytics {
     val deg = FreshCheckpoint(
       e.select(col("a").as("id")).unionByName(e.select(col("b").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("deg")))
-    val hint: DataFrame => DataFrame =
-      if (deg.count() <= localThreshold) broadcast(_) else identity
     val withDeg = e
-      .join(hint(deg.withColumnRenamed("id", "a").withColumnRenamed("deg", "da")), Seq("a"))
-      .join(hint(deg.withColumnRenamed("id", "b").withColumnRenamed("deg", "db")), Seq("b"))
+      .join(deg.withColumnRenamed("id", "a").withColumnRenamed("deg", "da"), Seq("a"))
+      .join(deg.withColumnRenamed("id", "b").withColumnRenamed("deg", "db"), Seq("b"))
     val oriented = FreshCheckpoint(withDeg.select(
       when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
         struct(col("a").as("src"), col("b").as("dst")))
@@ -667,8 +661,8 @@ object Analytics {
     val adj = FreshCheckpoint(oriented.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("nbrs")))
     val tri = oriented
-      .join(hint(adj.select(col("src"), col("nbrs").as("nbrsA"))), Seq("src"))
-      .join(hint(adj.select(col("src").as("dst"), col("nbrs").as("nbrsB"))), Seq("dst"))
+      .join(adj.select(col("src"), col("nbrs").as("nbrsA")), Seq("src"))
+      .join(adj.select(col("src").as("dst"), col("nbrs").as("nbrsB")), Seq("dst"))
       .select(col("src").as("u"), col("dst").as("v"),
         explode(array_intersect(col("nbrsA"), col("nbrsB"))).as("w"))
     tri.select(explode(array(

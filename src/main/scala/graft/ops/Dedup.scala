@@ -524,20 +524,15 @@ object Dedup {
   /** Exact shingle-set Jaccard for candidate pairs (a, b); filter ≥ threshold.
     * (MinHash estimates shingle-set Jaccard, so verification uses the same
     * set definition.) Shingle arrays are computed only for docs that appear
-    * in a candidate pair: the candidate ID SET broadcast-semi-joins onto the
-    * corpus scan (no shuffle of the doc table), so verify cost scales with
-    * the candidates, never the corpus. */
+    * in a candidate pair: the candidate ID SET semi-joins onto the corpus
+    * scan, so verify cost scales with the candidates, never the corpus. */
   def verifyJaccard(docs: DataFrame, cand: DataFrame, threshold: Double): DataFrame = {
     val candC = FreshCheckpoint(cand)
     val ids = candC.select(col("a").as("doc_id"))
       .unionByName(candC.select(col("b").as("doc_id"))).distinct()
-    // adaptive: a candidate explosion past the dimension threshold falls
-    // back to a shuffle semi-join rather than an oversized broadcast
-    val hint: DataFrame => DataFrame =
-      if (candC.count() * 2 <= graft.Limits.dimensionRows) broadcast(_) else identity
-    val candDocs = fanOut(docs).join(hint(ids), Seq("doc_id"), "leftsemi")
-    // candidate-doc arrays are read three times (adaptive count + both
-    // attach sides) — materialize the candidate-bounded table once
+    val candDocs = fanOut(docs).join(ids, Seq("doc_id"), "leftsemi")
+    // candidate-doc arrays are read by both attach sides — materialize the
+    // candidate-bounded table once
     verifyJaccardArrays(FreshCheckpoint(
       shingleArrays(candDocs).filter(size(col("arr")) > 0)), candC, threshold)
   }
@@ -546,15 +541,13 @@ object Dedup {
     * merge-intersect per candidate pair instead of the relational
     * candidates ⋈ tokens ⋈ tokens + groupBy, which enumerates Σ_pairs |set|
     * intermediate rows and shuffles the token stream. Arrays attach to the
-    * narrow candidate pairs over id equi-joins — adaptive broadcast below
-    * the dimension threshold, same pattern as ngramJaccard's verify. */
+    * narrow candidate pairs over id equi-joins, same pattern as
+    * ngramJaccard's verify. */
   private def verifyJaccardArrays(
       arrays: DataFrame, cand: DataFrame, threshold: Double): DataFrame = {
-    val hint: DataFrame => DataFrame =
-      if (arrays.count() <= graft.Limits.dimensionRows) broadcast(_) else identity
     val ga = arrays.select(col("doc_id").as("a"), col("arr").as("arrA"))
     val gb = arrays.select(col("doc_id").as("b"), col("arr").as("arrB"))
-    cand.join(hint(ga), Seq("a")).join(hint(gb), Seq("b"))
+    cand.join(ga, Seq("a")).join(gb, Seq("b"))
       .select(col("a"), col("b"),
         graft.expr.VectorOps.sortedArrayIntersect(col("arrA"), col("arrB")).as("inter"),
         size(col("arrA")).cast("long").as("szA"),
@@ -642,15 +635,11 @@ object Dedup {
     // codegen expression) instead of the relational candidates ⋈ grams ⋈
     // grams + groupBy, which enumerates Σ_pairs |set| intermediate rows.
     // Arrays attach to the NARROW candidate pairs via hash joins fused with
-    // the projection (same pattern as Similarity.bucketedNearDups). The
-    // broadcast hint is ADAPTIVE: gram arrays scale with the corpus, so past
-    // ~64k docs (≈60 MB of arrays) the attach falls back to a shuffle join —
-    // the candidate shuffle stays narrow either way.
-    val hint: DataFrame => DataFrame =
-      if (docs.count() <= graft.Limits.dimensionRows) broadcast(_) else identity
+    // the projection (same pattern as Similarity.bucketedNearDups); the
+    // candidate shuffle stays narrow whichever strategy the planner picks.
     val ga = gramArrays.select(col("doc_id").as("a"), col("arr").as("arrA"))
     val gb = gramArrays.select(col("doc_id").as("b"), col("arr").as("arrB"))
-    cand.join(hint(ga), Seq("a")).join(hint(gb), Seq("b"))
+    cand.join(ga, Seq("a")).join(gb, Seq("b"))
       .select(col("a"), col("b"),
         graft.expr.VectorOps.sortedArrayIntersect(col("arrA"), col("arrB")).as("inter"),
         size(col("arrA")).cast("long").as("szA"),
@@ -922,9 +911,7 @@ object Dedup {
     // strictly cheaper than the r13 wide shape, which carried the string
     // on EVERY exploded join-input row (measured at sf1: 83.3M join rows
     // vs a 16.6M-row post-filter pair relation; wide q191 14.5 s → narrow
-    // 11.1 s same-box). The attach joins take a broadcast hint only under
-    // the dimension-size gate; above it they are plain equi-joins and AQE
-    // picks the strategy from measured sizes.
+    // 11.1 s same-box).
     val narrowCols = Seq(col("pk"), col("len"), col("hist")) ++
       block.map(col)
     val segs = base.select(narrowCols :+
@@ -936,15 +923,9 @@ object Dedup {
     val cand = segs.as("x").join(probes.as("y"), joinCond)
       .select(col("x.pk").as("pa"), col("y.pk").as("pb"))
       .distinct()
-    val attHint: DataFrame => DataFrame =
-      if (Similarity.corpusCount(df) <= graft.Limits.dimensionRows)
-        broadcast(_)
-      else identity
     cand
-      .join(attHint(base.select(col("pk").as("pa"), col("s").as("sa"))),
-        Seq("pa"))
-      .join(attHint(base.select(col("pk").as("pb"), col("s").as("sb"))),
-        Seq("pb"))
+      .join(base.select(col("pk").as("pa"), col("s").as("sa")), Seq("pa"))
+      .join(base.select(col("pk").as("pb"), col("s").as("sb")), Seq("pb"))
       .select(col("pa"), col("pb"), col("sa"), col("sb"))
   }
 
@@ -1002,14 +983,6 @@ object Dedup {
         .filter(size(col("arr")) > 0))
     val exploded = gramArrays.select(col("doc_id"), explode(col("arr")).as("tok"))
     val dfTab = exploded.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    // NO broadcast hints anywhere in this operator: long-gram relations
-    // break the Limits.dimensionRows row-count heuristic (a 16-char-gram
-    // vocabulary is ~unique-substring-sized, and per-doc gram ARRAYS are
-    // ~5 KB/row — 64k rows is 300 MB, not "a few tens of MB"). An explicit
-    // hint would override Spark's size check and ship that; AQE instead
-    // broadcasts from MEASURED runtime sizes, so small corpora still get
-    // broadcast plans and large ones degrade to shuffle joins on narrow
-    // keys. Measured at sf1 (10x): 116 s with hints, see bench history.
     // EXTENDED prefix + lossless count filter: the single-witness prefix
     // bound (rarest ⌊(1−t)·sz⌋+1 grams must share ≥ 1) collapses on a
     // corpus with correlated rare grams — the sf1 scaled corpus enumerates

@@ -373,20 +373,17 @@ object Pipeline {
             .when(col("new_hash").isNull, "removed")
             .when(col("old_hash") === col("new_hash"), "unchanged")
             .otherwise("changed").as("status")))
-    // all five status counts in ONE tiny collected aggregate — they gate
-    // the adaptive hints AND become the record's literal count columns
+    // all five status counts in ONE tiny collected aggregate — they become
+    // the record's literal count columns
     val statusCnt: Map[String, Long] = diff.groupBy(col("status"))
       .agg(count(lit(1)).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
     val deltaIds = diff.filter(col("status").isin("added", "changed"))
       .select(col("doc_id"))
-    val deltaHint: DataFrame => DataFrame =
-      if (statusCnt("added") + statusCnt("changed") <=
-        graft.Limits.dimensionRows) broadcast(_) else identity
-    val deltaDocs = newSnap.join(deltaHint(deltaIds), Seq("doc_id"), "leftsemi")
+    val deltaDocs = newSnap.join(deltaIds, Seq("doc_id"), "leftsemi")
     // the delta's ledger entries are a semi-join slice of the ONE ledger
     // pass above — never a second text read
-    val deltaLedger = newLed.join(deltaHint(deltaIds), Seq("doc_id"), "leftsemi")
+    val deltaLedger = newLed.join(deltaIds, Seq("doc_id"), "leftsemi")
     advanceRelease(st, newSnap,
       diff.filter(col("status") =!= "unchanged"),
       deltaDocs, deltaLedger, statusCnt, numHashes, rowsPerBand, threshold)
@@ -402,11 +399,12 @@ object Pipeline {
     *
     * What still reads anything corpus-sized: NOTHING text-sized. The
     * narrow persisted state (ledger ids/hashes, signature index, pair
-    * relation) is scanned map-side against the BROADCAST changelog for
-    * the old-hash lookup / anti-joins — zero corpus-side shuffles, and
-    * over a doc_id-bucketed state layout those scans are partition-pruned
-    * file access. The `corpus` parameter (the post-changelog snapshot) is
-    * touched only candidate-bounded, inside [[Dedup.verifyJaccard]].
+    * relation) is semi-joined against the changelog ids for the old-hash
+    * lookup / anti-joins — map-side whenever the planner broadcasts the
+    * changelog; over a doc_id-bucketed state layout those scans are
+    * partition-pruned file access. The `corpus` parameter (the
+    * post-changelog snapshot) is touched only candidate-bounded, inside
+    * [[Dedup.verifyJaccard]].
     *
     * Semantics: an upsert whose text hash equals the ledger's is a NOOP
     * (state untouched — its signatures and pairs must survive), as is a
@@ -427,14 +425,12 @@ object Pipeline {
       threshold: Double = 0.8): DataFrame = {
     val ch = FreshCheckpoint(
       changelog.select(col("op"), col("doc_id"), col("text")))
-    val chHint: DataFrame => DataFrame =
-      if (ch.count() <= graft.Limits.dimensionRows) broadcast(_) else identity
-    // old-hash lookup for changelog ids ONLY: one map-side pass over the
-    // narrow ledger against the broadcast changelog id set
+    // old-hash lookup for changelog ids ONLY: one pass over the narrow
+    // ledger against the changelog id set
     val oldLook = st.ledger
-      .join(chHint(ch.select(col("doc_id"))), Seq("doc_id"), "leftsemi")
+      .join(ch.select(col("doc_id")), Seq("doc_id"), "leftsemi")
       .select(col("doc_id"), col("text_hash").as("old_hash"))
-    val diffT = FreshCheckpoint(ch.join(chHint(oldLook), Seq("doc_id"), "left")
+    val diffT = FreshCheckpoint(ch.join(oldLook, Seq("doc_id"), "left")
       .select(col("doc_id"), col("text"),
         when(col("op") === "delete" && col("old_hash").isNotNull, "removed")
           .when(col("op") === "delete", "noop")
@@ -482,20 +478,10 @@ object Pipeline {
       statusCnt("unchanged")
     val diffC = FreshCheckpoint(touchedDiff)
     val touchedIds = diffC.select(col("doc_id"))
-    // Adaptive delta-side broadcast (the verifyJaccard gate): a daily-sized
-    // delta broadcasts, so corpus-sided joins below stream map-side with NO
-    // exchange on the corpus side; a bulk delta falls back to shuffles. At
-    // lakehouse scale the persisted state would be bucketed by doc_id and
-    // the fallback would be exchange-free anyway.
-    val touched = statusCnt("added") + statusCnt("changed") +
-      statusCnt("removed")
-    val touchedHint: DataFrame => DataFrame =
-      if (touched <= graft.Limits.dimensionRows) broadcast(_)
-      else identity
     // 2. advance the signature index
     val deltaSigs = FreshCheckpoint(
       Dedup.minhashSignatures(deltaDocs, numHashes))
-    val keptSigs = st.sigs.join(touchedHint(touchedIds), Seq("doc_id"), "left_anti")
+    val keptSigs = st.sigs.join(touchedIds, Seq("doc_id"), "left_anti")
     // 3. both-direction candidate probe: delta bands BROADCAST against the
     // advanced band set, so the corpus-side band stream never shuffles
     val deltaBands = Dedup.bandedKeys(deltaSigs, numBands, rowsPerBand)
@@ -511,9 +497,9 @@ object Pipeline {
       Dedup.verifyJaccard(corpus, cand, threshold))
     // 4. advance the pair relation (narrow, pair-sized)
     val keptPairs = st.pairs
-      .join(touchedHint(touchedIds.select(col("doc_id").as("a"))),
+      .join(touchedIds.select(col("doc_id").as("a")),
         Seq("a"), "left_anti")
-      .join(touchedHint(touchedIds.select(col("doc_id").as("b"))),
+      .join(touchedIds.select(col("doc_id").as("b")),
         Seq("b"), "left_anti")
     val pairs2 = FreshCheckpoint(keptPairs.unionByName(deltaPairs))
     // 5. versioned enter/leave adjustment of the release aggregates.
@@ -523,10 +509,10 @@ object Pipeline {
     // semi-joins the corpus-sized relation down to this set FIRST, so
     // nothing corpus-sized shuffles.
     val oldPairsTouched = st.pairs
-      .join(touchedHint(touchedIds.select(col("doc_id").as("a"))),
+      .join(touchedIds.select(col("doc_id").as("a")),
         Seq("a"), "leftsemi")
       .unionByName(st.pairs
-        .join(touchedHint(touchedIds.select(col("doc_id").as("b"))),
+        .join(touchedIds.select(col("doc_id").as("b")),
           Seq("b"), "leftsemi"))
     val oldPairsTouchedC = FreshCheckpoint(oldPairsTouched)
     val flipIds = FreshCheckpoint(touchedIds
@@ -535,26 +521,23 @@ object Pipeline {
       .unionByName(deltaPairs.select(col("a").as("doc_id")))
       .unionByName(deltaPairs.select(col("b").as("doc_id")))
       .distinct())
-    val flipHint: DataFrame => DataFrame =
-      if (flipIds.count() <= graft.Limits.dimensionRows) broadcast(_)
-      else identity
     // pair-adjacent untouched docs are 'unchanged' in the flip flags
-    val flipDiff = flipIds.join(flipHint(diffC), Seq("doc_id"), "left")
+    val flipDiff = flipIds.join(diffC, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("status"), lit("unchanged")).as("status"))
-    val ledgerFlip = st.ledger.join(flipHint(flipIds), Seq("doc_id"), "leftsemi")
+    val ledgerFlip = st.ledger.join(flipIds, Seq("doc_id"), "leftsemi")
       .select(col("doc_id"), col("n_tokens").as("old_tokens"),
         col("h").as("old_h"), lit(true).as("in_old"))
     val oldDroppedF = st.pairs.select(col("b").as("doc_id"))
-      .join(flipHint(flipIds), Seq("doc_id"), "leftsemi").distinct()
+      .join(flipIds, Seq("doc_id"), "leftsemi").distinct()
       .select(col("doc_id"), lit(true).as("old_dropped"))
     val newDroppedF = pairs2.select(col("b").as("doc_id"))
-      .join(flipHint(flipIds), Seq("doc_id"), "leftsemi").distinct()
+      .join(flipIds, Seq("doc_id"), "leftsemi").distinct()
       .select(col("doc_id"), lit(true).as("new_dropped"))
     val flags = flipDiff
-      .join(flipHint(ledgerFlip), Seq("doc_id"), "left")
-      .join(flipHint(oldDroppedF), Seq("doc_id"), "left")
-      .join(flipHint(newDroppedF), Seq("doc_id"), "left")
+      .join(ledgerFlip, Seq("doc_id"), "left")
+      .join(oldDroppedF, Seq("doc_id"), "left")
+      .join(newDroppedF, Seq("doc_id"), "left")
       .select(col("doc_id"), col("old_tokens"), col("old_h"), col("status"),
         coalesce(col("in_old"), lit(false)).as("in_old"),
         (col("status") =!= "removed").as("in_new"),
@@ -570,8 +553,8 @@ object Pipeline {
     // text ⇒ same n_tokens and h), so no snapshot read here either
     val enters = flagsC.filter(col("in_new") && !col("new_dropped") &&
         (col("status") =!= "unchanged" || col("old_dropped")))
-      .join(flipHint(deltaLedger.select(col("doc_id"),
-          col("n_tokens").as("new_tokens"), col("h").as("new_h"))),
+      .join(deltaLedger.select(col("doc_id"),
+          col("n_tokens").as("new_tokens"), col("h").as("new_h")),
         Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("new_tokens"), col("old_tokens")).as("n_tokens"),

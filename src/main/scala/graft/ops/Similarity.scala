@@ -659,21 +659,16 @@ object Similarity {
     // Candidate pairs are generated NARROW (ids only): a self-join that
     // carries the embedding arrays materializes ~4 KB per candidate row
     // before the threshold filter (measured 166 s on a 3× corpus). Arrays are
-    // attached afterwards via broadcast hash joins whose consume chain fuses
-    // with the dot/filter projection — candidate rows stay 16 bytes and the
-    // arrays are only read through the broadcast map, never copied per pair.
-    // The broadcast hint is ADAPTIVE: embeddings scale with the corpus, so
-    // past ~64k vectors (≈35 MB with norms) the attach falls back to a
-    // shuffle join — the candidate shuffle stays narrow either way.
+    // attached afterwards, so candidate rows stay 16 bytes; when the planner
+    // broadcasts the attach its consume chain fuses with the dot/filter
+    // projection and the arrays are only read through the broadcast map.
     val meta = e.select(col("label"), col("vec_id"))
     val cand = meta.as("x").join(meta.as("y"),
         col("x.label") === col("y.label") && col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
-    val hint: DataFrame => DataFrame =
-      if (corpusCount(embeddings) <= graft.Limits.dimensionRows) broadcast(_) else identity
     val ea = e.select(col("vec_id").as("a"), col("emb").as("ea"), col("nrm").as("na"))
     val eb = e.select(col("vec_id").as("b"), col("emb").as("eb"), col("nrm").as("nb"))
-    cand.join(hint(ea), Seq("a")).join(hint(eb), Seq("b"))
+    cand.join(ea, Seq("a")).join(eb, Seq("b"))
       .select(col("a"), col("b"),
         round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6).as("cos"))
       .filter(col("cos") >= threshold)
@@ -1118,9 +1113,6 @@ object Similarity {
     val med = assigned.groupBy(col("centroid"))
       .agg(percentile(col("dist"), lit(0.5)).as("med"))
       .filter(col("med") > 0)
-    // no broadcast hint: med is ~n/256 rows — an explicit hint on an
-    // n-proportional relation overrides Spark's size check (the Limits
-    // .dimensionRows trap containment's comment documents); AQE decides
     assigned.join(med, Seq("centroid"))
       .filter(col("dist").cast("double") > lit(cut) * col("med"))
       .select(col("vec_id"), col("centroid"), col("dist"),

@@ -646,7 +646,7 @@ object TextAnalysis {
     * the filter keeps the band.
     *
     * Shape: one token groupBy builds the LM (vocabulary-sized — ≪ corpus),
-    * the LM broadcasts back onto the token stream, and the per-doc average
+    * the LM joins back onto the token stream, and the per-doc average
     * is one partial agg; the corpus-total N is a 1-row broadcast scalar.
     * Per-token terms are floored to 1e-6 units BEFORE summing, so the
     * per-doc sum is an order-independent BIGINT and the integer-division
@@ -663,13 +663,7 @@ object TextAnalysis {
     // re-aggregation reuses lm's exchange (ReusedExchange) and touches
     // vocabulary-sized data only
     val n = lm.agg(sum(col("cnt")).as("n"))
-    // vocabulary grows sub-linearly (Heaps' law) but is not bounded: gate
-    // the broadcast on corpus size like the bm25 query side — past the
-    // dimension bound the LM attach falls back to a shuffle hash join on
-    // tok (still narrow: the token stream carries 2 columns)
-    val lmHint =
-      if (docs.count() <= graft.Limits.dimensionRows) broadcast(lm) else lm
-    toks.join(lmHint, Seq("tok"))
+    toks.join(lm, Seq("tok"))
       .crossJoin(broadcast(n))
       .select(col("doc_id"),
         floor((log(col("n").cast("double")) - log(col("cnt").cast("double")))
@@ -692,11 +686,9 @@ object TextAnalysis {
     * on any engine.
     *
     * Scale shape: one token explode → vocabulary-sized LM aggregate
-    * (map-side combine) → LM attach (broadcast below the dimension bound,
-    * else a shuffle hash join on tok — the [[unigramLogProb]] gate, sized
-    * via the memoized [[graft.ops.Similarity.corpusCount]], not an extra
-    * eager count) → (source, split) rollup. Token NLLs are floor'd
-    * micro-units BEFORE summation, so accumulation order can't drift.
+    * (map-side combine) → LM attach on tok → (source, split) rollup. Token
+    * NLLs are floor'd micro-units BEFORE summation, so accumulation order
+    * can't drift.
     *
     * @return (source, n_train_tokens, n_val_tokens, train_nll_u,
     *         val_nll_u, shift_u) for sources with mass on both sides
@@ -715,11 +707,7 @@ object TextAnalysis {
     val lm = toks.filter(col("split") === "train")
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val nv = lm.agg(sum(col("cnt")).as("n"), count(lit(1)).as("v"))
-    val lmHint =
-      if (Similarity.corpusCount(docs) <= graft.Limits.dimensionRows)
-        broadcast(lm)
-      else lm
-    val scored = toks.join(lmHint, Seq("tok"), "left")
+    val scored = toks.join(lm, Seq("tok"), "left")
       .crossJoin(broadcast(nv))
       .select(col("source"), col("split"),
         floor((log(col("n").cast("double") + col("v") + 1d)
@@ -801,11 +789,9 @@ object TextAnalysis {
     val nDocs = docs.count()
     val dft = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf && col("df") * 2 <= nDocs)
-    val hint: DataFrame => DataFrame =
-      if (nDocs <= graft.Limits.dimensionRows) broadcast(_) else identity
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("w_u").desc, col("tok"))
-    tf.join(hint(dft), Seq("tok"))
+    tf.join(dft, Seq("tok"))
       .select(col("doc_id"), col("tok"),
         (col("tf") * floor(lit(1000.0 * nDocs) / col("df")).cast("long"))
           .as("w_u"))
@@ -840,11 +826,7 @@ object TextAnalysis {
     val band = cw.crossJoin(broadcast(n))
       .filter(col("c") >= minCount && col("c") * maxShareInv <= col("n"))
       .select(col("tok"), col("c"))
-    // banded vocab is dictionary-sized; same broadcast-vs-dimension gate
-    // as unigramLogProb for the corpus-growth case
-    val hint: DataFrame => DataFrame =
-      if (docs.count() <= graft.Limits.dimensionRows) broadcast(_) else identity
-    val t = toks.join(hint(band.select(col("tok"))), Seq("tok"))
+    val t = toks.join(band.select(col("tok")), Seq("tok"))
     val probes = t.select(col("doc_id"), col("tok").as("t1"),
       explode(sequence(col("pos") + 1, col("pos") + window)).as("pp"))
     val ev = probes.join(
@@ -860,8 +842,8 @@ object TextAnalysis {
     val p = cabAll.agg(sum(col("cab")).as("p"))
     val cab = cabAll.filter(col("cab") >= minPair)
     cab
-      .join(hint(band.select(col("tok").as("a"), col("c").as("ca"))), Seq("a"))
-      .join(hint(band.select(col("tok").as("b"), col("c").as("cb"))), Seq("b"))
+      .join(band.select(col("tok").as("a"), col("c").as("ca")), Seq("a"))
+      .join(band.select(col("tok").as("b"), col("c").as("cb")), Seq("b"))
       .crossJoin(broadcast(p)).crossJoin(broadcast(n))
       .select(col("a"), col("b"), col("cab").as("n_cooc"),
         floor((log(col("cab").cast("double")) - log(col("p").cast("double"))
@@ -882,10 +864,8 @@ object TextAnalysis {
     * Scale shape: bigram events enumerate via the (doc, pos+1) equi-join on
     * the positional token stream (same as [[pmiPairs]] — never len² work);
     * the bigram count table is corpus-vocabulary-sized and attaches back by
-    * a shuffle hash join on the pair key (a bigram LM outgrows any
-    * broadcast bound by construction — unlike the unigram attach there is
-    * no broadcast fast path to gate). Unigram counts and V ride the same
-    * broadcast-vs-dimension gate as every other dictionary here.
+    * an equi-join on the pair key, the unigram counts by one on w₁, and V
+    * is a 1-row broadcast scalar.
     *
     * @return (doc_id, n_bigrams, avg_nll_u) for docs with ≥ 1 bigram;
     *         avg_nll_u = Σfloor(nll·1e6) div n
@@ -901,10 +881,8 @@ object TextAnalysis {
     val cw = toks.groupBy(col("tok").as("w1")).agg(count(lit(1)).as("c1"))
     val v = cw.agg(count(lit(1)).as("v"))
     val cb = bigrams.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cab"))
-    val hint: DataFrame => DataFrame =
-      if (docs.count() <= graft.Limits.dimensionRows) broadcast(_) else identity
     bigrams.join(cb, Seq("w1", "w2"))
-      .join(hint(cw), Seq("w1"))
+      .join(cw, Seq("w1"))
       .crossJoin(broadcast(v))
       .select(col("doc_id"),
         floor((log(col("c1").cast("double") + col("v").cast("double"))
@@ -1131,10 +1109,8 @@ object TextAnalysis {
     *
     * Scale shape: ONE token explode feeds both LMs (the in-domain counts
     * ride the general LM's aggregate as a conditional sum — no second
-    * corpus pass, no LM join); the LM relation is vocabulary-sized
-    * (broadcast below the dimension bound via the memoized corpus count,
-    * else a shuffle hash join on tok); per-token integer terms then one
-    * (doc)-keyed rollup.
+    * corpus pass, no LM join); the vocabulary-sized LM relation attaches
+    * on tok; per-token integer terms then one (doc)-keyed rollup.
     *
     * @return (doc_id, source, n_tokens, sum_ced_u, in_domain)
     */
@@ -1147,11 +1123,7 @@ object TextAnalysis {
         .as("cnt_in"))
     val nv = lm.agg(sum(col("cnt_gen")).as("n_gen"),
       sum(col("cnt_in")).as("n_in"), count(lit(1)).as("v"))
-    val lmHint =
-      if (Similarity.corpusCount(docs) <= graft.Limits.dimensionRows)
-        broadcast(lm)
-      else lm
-    toks.join(lmHint, Seq("tok"))
+    toks.join(lm, Seq("tok"))
       .crossJoin(broadcast(nv))
       .select(col("doc_id"), col("source"),
         (floor((log(col("n_in").cast("double") + col("v") + 1d)

@@ -82,10 +82,10 @@ class AnalyticsSpec extends SparkTestBase {
   test("componentListings: above-threshold entities attach without a broadcast, rows stay per-member") {
     import spark.implicits._
     // entities larger than Limits.dimensionRows must NOT be broadcast (the
-    // vertex-attribute table is fact-sized at 100×; an unconditional
-    // broadcast OOMs the driver). With the auto-broadcast threshold off, the
-    // only BroadcastHashJoin a plan can contain is the explicit hint — so
-    // its absence proves the gate fired. The tiny cats join is a
+    // vertex-attribute table is fact-sized at 100×; a forced broadcast OOMs
+    // the driver). With the auto-broadcast threshold off, the only
+    // BroadcastHashJoin a plan can contain is an explicit hint — so its
+    // absence proves the operator forces none. The tiny cats join is a
     // BroadcastNestedLoopJoin (range predicate) and doesn't confound this.
     val n = graft.Limits.dimensionRows + 1
     val ents = spark.range(n).select($"id", concat(lit("e"), $"id").as("name"),
@@ -93,22 +93,21 @@ class AnalyticsSpec extends SparkTestBase {
     // sizes 4-5 — inside the reference taxonomy (and off the ambiguous
     // size-25 medium/large overlap), so the category join keeps every member
     val comps = spark.range(n).select($"id", ($"id" % 16384).as("component"))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val big = Analytics.componentListings(comps, ents)
-      val p = big.queryExecution.explainString(
+    def formatted(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+    withoutAutoBroadcast {
+      val big = Analytics.componentListings(comps, ents)
+      val p = formatted(big)
       assert(!p.contains("BroadcastHashJoin"), p)
       // per-member output: every member is its own row, no listing column
       assert(big.columns.toSeq === Seq("category", "component", "size", "id", "line"))
       assert(big.count() === n)
-      val small = Analytics.componentListings(
-        comps.limit(10), ents.limit(10))
-      val ps = small.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      assert(ps.contains("BroadcastHashJoin"), ps)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
+    // at the session's default threshold the planner's own size check
+    // broadcasts the small entity attach
+    val ps = formatted(Analytics.componentListings(comps.limit(10), ents.limit(10)))
+    assert(ps.contains("BroadcastHashJoin"), ps)
   }
 
   test("degree stats match networkx") {

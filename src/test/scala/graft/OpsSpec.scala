@@ -39,6 +39,11 @@ class OpsSpec extends SparkTestBase {
     assert(j12 === 1.0)
     // no pair involving doc 5
     assert(!pairs.exists(p => p._1 == 5L || p._2 == 5L))
+    // the shuffle-join path (every verify join above the broadcast
+    // threshold) returns the same rows
+    val shuffled = withoutAutoBroadcast(Dedup.minhashLsh(docs, 8, 2, 0.5).collect())
+      .map(r => (r.getAs[Long]("a"), r.getAs[Long]("b"), r.getAs[Double]("jaccard")))
+    assert(shuffled.toSet === pairs.toSet)
   }
 
   test("incremental minhash: batch dedups against corpus index and itself") {
@@ -103,6 +108,12 @@ class OpsSpec extends SparkTestBase {
     assert(pairs.contains((1L, 3L)) || pairs.contains((2L, 3L)))
     // doc 5 is in source s2: never paired despite same lang
     assert(!pairs.exists(p => p._1 == 5L || p._2 == 5L))
+    // the shuffle-join path (the array attaches above the broadcast
+    // threshold) returns the same rows
+    val all = Dedup.ngramJaccard(docs, 3, 0.5).collect().map(_.toSeq).toSet
+    val shuffled = withoutAutoBroadcast(Dedup.ngramJaccard(docs, 3, 0.5).collect())
+      .map(_.toSeq).toSet
+    assert(shuffled === all)
   }
 
   test("cosine top-k: planted identical vector ranks first") {

@@ -50,6 +50,11 @@ class Round11Spec extends SparkTestBase {
     val fullRow = full.collect().map(_.toSeq)
     assert(incRow.length == 1 && fullRow.length == 1)
     assert(incRow.head == fullRow.head)
+    // the shuffle-join path (a delta above the broadcast threshold)
+    // advances to the same record
+    val shuffled = withoutAutoBroadcast(
+      Pipeline.incrementalRelease(Pipeline.releaseState(oldDf), newDf).collect())
+    assert(shuffled.map(_.toSeq).toSeq == incRow.toSeq)
     // planted expectations: the record is right, not just self-consistent
     val m = inc.first().getValuesMap[Long](inc.columns)
     assert(m("n_docs") == 10L)

@@ -11,6 +11,17 @@ trait SparkTestBase extends AnyFunSuite {
     * of the custom expressions (`spark.sql.extensions=graft.GraftExtensions`). */
   lazy val sqlSpark: SparkSession = SparkTestBase.extended
 
+  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold=-1`, which also
+    * turns off AQE's runtime broadcast: only an explicit `broadcast(...)`
+    * can plan a broadcast join, so every planner-sized join shuffles — the
+    * path a relation above the broadcast threshold takes. */
+  def withoutAutoBroadcast[T](f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try f finally spark.conf.set(key, prev)
+  }
+
   val refData = "/root/reference/data"
   val testData = "/root/testdata"
 }

@@ -28,6 +28,13 @@ class EdJoinSpec extends SparkTestBase {
       .select(col("pa"), col("pb"), col("dist"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === Set((1L, 2L, 1L), (2L, 3L, 1L), (1L, 3L, 2L), (5L, 6L, 2L)))
+    // the shuffle-join path (the string attaches above the broadcast
+    // threshold) enumerates the same candidates
+    def cands() = Dedup.editDistanceCandidates(rows, "id", "s", Seq("blk"), 2)
+      .collect().map(_.toSeq).toSet
+    val viaBroadcast = cands()
+    assert(viaBroadcast.nonEmpty)
+    assert(withoutAutoBroadcast(cands()) === viaBroadcast)
   }
 
   test("segment filter is lossless vs brute force on the real part table (d=1 and d=2)") {
