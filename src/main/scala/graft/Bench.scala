@@ -66,8 +66,8 @@ object Bench {
 
     // (query_sec, gc_sec_during_query) — the gc column diagnoses environment
     // anomalies (round 1: identical commit ran 69 s locally, 1081 s on the
-    // driver box, inflation concentrated in allocation-heavy queries). A
-    // failure records -1 on stdout and its cause on stderr.
+    // driver box, inflation concentrated in allocation-heavy queries)
+    // A failure records -1 on stdout and its cause on stderr.
     def runOne(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
       val g0 = gcMillis()
