@@ -5,8 +5,12 @@ package graft
   * algorithm (with a distributed fallback above it). 64k rows of ids/arrays
   * is a few tens of MB: far below any executor/driver budget, far above
   * every dimension table and graph the reference serves (~17k entities).
-  * Stated once so the adaptive gates can't drift apart. Join strategies
-  * are not sized here: the planner picks them from measured sizes.
+  * Stated once so the adaptive gates can't drift apart. Four joins also
+  * gate an explicit broadcast on it where Spark's own estimate is known
+  * to mis-size the relation (`Similarity.bucketedNearDups`,
+  * `TextAnalysis.domainShift`, `TextAnalysis.keywords`,
+  * `Pipeline.incrementalRelease`); every other join strategy is the
+  * planner's.
   */
 object Limits {
   val dimensionRows: Long = 65536

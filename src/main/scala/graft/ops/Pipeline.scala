@@ -373,17 +373,24 @@ object Pipeline {
             .when(col("new_hash").isNull, "removed")
             .when(col("old_hash") === col("new_hash"), "unchanged")
             .otherwise("changed").as("status")))
-    // all five status counts in ONE tiny collected aggregate — they become
-    // the record's literal count columns
+    // all five status counts in ONE tiny collected aggregate — they gate
+    // the delta-side broadcast AND become the record's literal count columns
     val statusCnt: Map[String, Long] = diff.groupBy(col("status"))
       .agg(count(lit(1)).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
     val deltaIds = diff.filter(col("status").isin("added", "changed"))
       .select(col("doc_id"))
-    val deltaDocs = newSnap.join(deltaIds, Seq("doc_id"), "leftsemi")
+    // The gate reads a count already collected above, so it costs no job.
+    // The planner cannot size deltaIds itself: a filter over the diff
+    // keeps the WHOLE diff's estimate, so past the broadcast threshold it
+    // would plan sort-merge semi-joins that shuffle the full-text snapshot.
+    val deltaHint: DataFrame => DataFrame =
+      if (statusCnt("added") + statusCnt("changed") <=
+        graft.Limits.dimensionRows) broadcast(_) else identity
+    val deltaDocs = newSnap.join(deltaHint(deltaIds), Seq("doc_id"), "leftsemi")
     // the delta's ledger entries are a semi-join slice of the ONE ledger
     // pass above — never a second text read
-    val deltaLedger = newLed.join(deltaIds, Seq("doc_id"), "leftsemi")
+    val deltaLedger = newLed.join(deltaHint(deltaIds), Seq("doc_id"), "leftsemi")
     advanceRelease(st, newSnap,
       diff.filter(col("status") =!= "unchanged"),
       deltaDocs, deltaLedger, statusCnt, numHashes, rowsPerBand, threshold)

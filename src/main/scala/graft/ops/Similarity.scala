@@ -659,16 +659,24 @@ object Similarity {
     // Candidate pairs are generated NARROW (ids only): a self-join that
     // carries the embedding arrays materializes ~4 KB per candidate row
     // before the threshold filter (measured 166 s on a 3× corpus). Arrays are
-    // attached afterwards, so candidate rows stay 16 bytes; when the planner
-    // broadcasts the attach its consume chain fuses with the dot/filter
-    // projection and the arrays are only read through the broadcast map.
+    // attached afterwards via broadcast hash joins whose consume chain fuses
+    // with the dot/filter projection — candidate rows stay 16 bytes and the
+    // arrays are only read through the broadcast map, never copied per pair.
+    // The broadcast hint is ADAPTIVE: embeddings scale with the corpus, so
+    // past ~64k vectors (≈35 MB with norms) the attach falls back to a
+    // shuffle join — the candidate shuffle stays narrow either way. The hint
+    // stays explicit because the arrays pass Spark's 10 MB broadcast
+    // threshold long before this bound: at 60k 64-d vectors a planner-sized
+    // attach shuffles 160 MB where the broadcast shuffles 17 MB.
     val meta = e.select(col("label"), col("vec_id"))
     val cand = meta.as("x").join(meta.as("y"),
         col("x.label") === col("y.label") && col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"))
+    val hint: DataFrame => DataFrame =
+      if (corpusCount(embeddings) <= graft.Limits.dimensionRows) broadcast(_) else identity
     val ea = e.select(col("vec_id").as("a"), col("emb").as("ea"), col("nrm").as("na"))
     val eb = e.select(col("vec_id").as("b"), col("emb").as("eb"), col("nrm").as("nb"))
-    cand.join(ea, Seq("a")).join(eb, Seq("b"))
+    cand.join(hint(ea), Seq("a")).join(hint(eb), Seq("b"))
       .select(col("a"), col("b"),
         round(dot(col("ea"), col("eb")) / (col("na") * col("nb")), 6).as("cos"))
       .filter(col("cos") >= threshold)

@@ -646,7 +646,8 @@ object TextAnalysis {
     * the filter keeps the band.
     *
     * Shape: one token groupBy builds the LM (vocabulary-sized — ≪ corpus),
-    * the LM joins back onto the token stream, and the per-doc average
+    * materialized so its attach back onto the token stream is planned from
+    * the measured vocabulary size, and the per-doc average
     * is one partial agg; the corpus-total N is a 1-row broadcast scalar.
     * Per-token terms are floored to 1e-6 units BEFORE summing, so the
     * per-doc sum is an order-independent BIGINT and the integer-division
@@ -658,9 +659,16 @@ object TextAnalysis {
     val toks = Dedup.fanOut(docs).select(col("doc_id"),
       explode(filter(split(lower(col("text")), "\\s+"), x => x =!= ""))
         .as("tok"))
-    val lm = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
-    // N from the LM, not from a second pass over the token explode: the
-    // re-aggregation reuses lm's exchange (ReusedExchange) and touches
+    // Materializing the LM re-grounds its stats in REAL block sizes
+    // (FreshCheckpoint): a groupBy's static estimate tracks its INPUT, so
+    // an un-materialized LM over a corpus past the broadcast threshold
+    // plans a sort-merge join that shuffles the whole token stream, even
+    // when the vocabulary is a few MB (60k docs: 184 MB shuffled, against
+    // 88 MB with the LM materialized). Measured, the planner broadcasts it
+    // whenever the vocabulary is small, whatever the corpus size.
+    val lm = FreshCheckpoint(
+      toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt")))
+    // N from the LM, not from a second pass over the token explode:
     // vocabulary-sized data only
     val n = lm.agg(sum(col("cnt")).as("n"))
     toks.join(lm, Seq("tok"))
@@ -686,7 +694,9 @@ object TextAnalysis {
     * on any engine.
     *
     * Scale shape: one token explode → vocabulary-sized LM aggregate
-    * (map-side combine) → LM attach on tok → (source, split) rollup. Token
+    * (map-side combine) → LM attach (broadcast below the dimension bound,
+    * sized via the memoized [[graft.ops.Similarity.corpusCount]], else a
+    * shuffle join on tok) → (source, split) rollup. Token
     * NLLs are floor'd micro-units BEFORE summation, so accumulation order
     * can't drift.
     *
@@ -707,7 +717,15 @@ object TextAnalysis {
     val lm = toks.filter(col("split") === "train")
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
     val nv = lm.agg(sum(col("cnt")).as("n"), count(lit(1)).as("v"))
-    val scored = toks.join(lm, Seq("tok"), "left")
+    // a row-count gate, not unigramLogProb's materialized LM: at 60k docs
+    // the extra pass over the split token stream cost more (+20 % time)
+    // than the broadcast it buys, and the planner alone, sizing the LM
+    // from the corpus, shuffles the token stream (75 → 176 MB)
+    val lmHint =
+      if (Similarity.corpusCount(docs) <= graft.Limits.dimensionRows)
+        broadcast(lm)
+      else lm
+    val scored = toks.join(lmHint, Seq("tok"), "left")
       .crossJoin(broadcast(nv))
       .select(col("source"), col("split"),
         floor((log(col("n").cast("double") + col("v") + 1d)
@@ -789,9 +807,15 @@ object TextAnalysis {
     val nDocs = docs.count()
     val dft = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf && col("df") * 2 <= nDocs)
+    // nDocs is counted for the weights anyway, so this gate costs no job.
+    // The df table's static estimate tracks tf, not the vocabulary, and
+    // materializing it would shuffle tf a second time (+18 % shuffle bytes
+    // at 60k docs), so the dictionary-size gate stays.
+    val hint: DataFrame => DataFrame =
+      if (nDocs <= graft.Limits.dimensionRows) broadcast(_) else identity
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("w_u").desc, col("tok"))
-    tf.join(dft, Seq("tok"))
+    tf.join(hint(dft), Seq("tok"))
       .select(col("doc_id"), col("tok"),
         (col("tf") * floor(lit(1000.0 * nDocs) / col("df")).cast("long"))
           .as("w_u"))
@@ -821,11 +845,15 @@ object TextAnalysis {
     val toks = Dedup.fanOut(docs).select(col("doc_id"),
       posexplode(filter(split(lower(col("text")), "\\s+"), x => x =!= ""))
         .as(Seq("pos", "tok")))
-    val cw = toks.groupBy(col("tok")).agg(count(lit(1)).as("c"))
-    val n = toks.agg(count(lit(1)).as("n"))
-    val band = cw.crossJoin(broadcast(n))
+    // the unigram counts and the band are vocabulary-sized: both are
+    // materialized (see unigramLogProb) so the band's three attaches are
+    // planned from its measured size; N is summed from the counts, so the
+    // token stream is aggregated once
+    val cw = FreshCheckpoint(toks.groupBy(col("tok")).agg(count(lit(1)).as("c")))
+    val n = cw.agg(sum(col("c")).as("n"))
+    val band = FreshCheckpoint(cw.crossJoin(broadcast(n))
       .filter(col("c") >= minCount && col("c") * maxShareInv <= col("n"))
-      .select(col("tok"), col("c"))
+      .select(col("tok"), col("c")))
     val t = toks.join(band.select(col("tok")), Seq("tok"))
     val probes = t.select(col("doc_id"), col("tok").as("t1"),
       explode(sequence(col("pos") + 1, col("pos") + window)).as("pp"))
@@ -1109,8 +1137,9 @@ object TextAnalysis {
     *
     * Scale shape: ONE token explode feeds both LMs (the in-domain counts
     * ride the general LM's aggregate as a conditional sum — no second
-    * corpus pass, no LM join); the vocabulary-sized LM relation attaches
-    * on tok; per-token integer terms then one (doc)-keyed rollup.
+    * corpus pass, no LM join); the vocabulary-sized LM relation is
+    * materialized as in [[unigramLogProb]] and attaches on tok; per-token
+    * integer terms then one (doc)-keyed rollup.
     *
     * @return (doc_id, source, n_tokens, sum_ced_u, in_domain)
     */
@@ -1118,9 +1147,10 @@ object TextAnalysis {
     val toks = Dedup.fanOut(docs).select(col("doc_id"), col("source"),
       explode(filter(split(lower(col("text")), "\\s+"), x => x =!= ""))
         .as("tok"))
-    val lm = toks.groupBy(col("tok")).agg(count(lit(1)).as("cnt_gen"),
+    val lm = FreshCheckpoint(toks.groupBy(col("tok")).agg(
+      count(lit(1)).as("cnt_gen"),
       sum(when(col("source") === targetSource, 1L).otherwise(0L))
-        .as("cnt_in"))
+        .as("cnt_in")))
     val nv = lm.agg(sum(col("cnt_gen")).as("n_gen"),
       sum(col("cnt_in")).as("n_in"), count(lit(1)).as("v"))
     toks.join(lm, Seq("tok"))

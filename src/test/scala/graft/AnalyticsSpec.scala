@@ -81,13 +81,14 @@ class AnalyticsSpec extends SparkTestBase {
 
   test("componentListings: above-threshold entities attach without a broadcast, rows stay per-member") {
     import spark.implicits._
-    // entities larger than Limits.dimensionRows must NOT be broadcast (the
-    // vertex-attribute table is fact-sized at 100×; a forced broadcast OOMs
-    // the driver). With the auto-broadcast threshold off, the only
-    // BroadcastHashJoin a plan can contain is an explicit hint — so its
-    // absence proves the operator forces none. The tiny cats join is a
-    // BroadcastNestedLoopJoin (range predicate) and doesn't confound this.
-    val n = graft.Limits.dimensionRows + 1
+    // the operator forces no broadcast, so a fact-sized entity table (the
+    // vertex-attribute table at 100×; a forced broadcast OOMs the driver)
+    // is never shipped by the operator itself. With the auto-broadcast
+    // threshold off, the only BroadcastHashJoin a plan can contain is an
+    // explicit hint — so its absence proves the operator forces none. The
+    // tiny cats join is a BroadcastNestedLoopJoin (range predicate) and
+    // doesn't confound this. n is just large.
+    val n = 65537L
     val ents = spark.range(n).select($"id", concat(lit("e"), $"id").as("name"),
       lit("work").as("type"))
     // sizes 4-5 — inside the reference taxonomy (and off the ambiguous
