@@ -1,9 +1,10 @@
 package graft.graph
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FreshCheckpoint
-import org.apache.spark.storage.StorageLevel
 
 /** n-hop BFS subgraph extraction with an exclusion ("collapse") list.
   *
@@ -29,11 +30,17 @@ import org.apache.spark.storage.StorageLevel
   * (`grapher.py:81-84`) only causes redundant re-expansion, never a different
   * node/edge set — we implement the clean anti-join semantics (SURVEY §2.6 T5).
   *
-  * Implementation: driver-side loop of DataFrame joins — frontier ⋈ undirected
-  * edges, anti-join visited — with `localCheckpoint()` per hop to truncate
-  * lineage (25+-hop full-graph runs would otherwise blow up planning). Each
-  * hop is one shuffle on the join key; at cluster scale the visited/frontier
-  * sets stay partitioned by id and AQE handles the shrinking frontier.
+  * Implementation: two paths with these semantics. [[extract]] is a
+  * driver-side loop of DataFrame joins — frontier ⋈ undirected edges,
+  * anti-join visited — with a `FreshCheckpoint` per hop to truncate lineage
+  * (25+-hop full-graph runs would otherwise blow up planning); each hop is
+  * one shuffle on the join key, and at cluster scale the visited/frontier
+  * sets stay partitioned by id while AQE handles the shrinking frontier.
+  * [[LocalIndex]] runs the same BFS over one collected edge list in driver
+  * memory, with no Spark job. `HttpShim` picks one path at construction by
+  * the graph operators' driver-local gate: node count ≤ `localCutoff`
+  * (default [[Analytics.localThreshold]]) serves every request from a
+  * [[LocalIndex]], a larger graph runs [[extract]] per request.
   */
 object Subgraph {
 
@@ -57,7 +64,7 @@ object Subgraph {
     val adj = edges.select($"src".as("id"), $"dst".as("nbr"))
       .unionByName(edges.select($"dst".as("id"), $"src".as("nbr")))
 
-    var visited = seeds.distinct.toDF("id").persist(StorageLevel.MEMORY_AND_DISK)
+    var visited = seeds.distinct.toDF("id")
     var frontier = visited
     var i = 0
     var frontierEmpty = false
@@ -103,6 +110,59 @@ object Subgraph {
     Result(nodes, kept)
   }
 
+  /** A [[extract]] answer from a [[LocalIndex]]: the result node ids, and the
+    * kept edges as indices into the index's edge list. */
+  case class LocalResult(nodes: Seq[String], edges: Seq[Int])
+
+  /** Driver-local BFS over a collected edge list: edge `i` is
+    * `src(i) → dst(i)`, distinct rows. Holds an undirected adjacency over
+    * edge indices; [[extract]] answers exactly as [[Subgraph.extract]] does
+    * over the same edges, with no Spark job. Immutable, so one index serves
+    * concurrent requests. */
+  final class LocalIndex(src: IndexedSeq[String], dst: IndexedSeq[String]) {
+    require(src.length == dst.length, "src and dst must have one entry per edge")
+
+    /** node id → indices of the edges incident to it, either direction */
+    private val incident: Map[String, Array[Int]] = {
+      val b = mutable.HashMap.empty[String, mutable.ArrayBuilder.ofInt]
+      def add(id: String, e: Int) =
+        b.getOrElseUpdate(id, new mutable.ArrayBuilder.ofInt) += e
+      src.indices.foreach { e =>
+        add(src(e), e)
+        if (dst(e) != src(e)) add(dst(e), e)
+      }
+      b.iterator.map { case (id, es) => id -> es.result() }.toMap
+    }
+    private val none = Array.emptyIntArray
+
+    def extract(seeds: Seq[String], hops: Int, exclude: Seq[String] = Nil): LocalResult = {
+      val excluded = exclude.toSet
+      val visited = mutable.HashSet.empty[String] ++= seeds
+      var frontier: Seq[String] = seeds.distinct
+      var i = 0
+      while (i < hops && frontier.nonEmpty) {
+        val next = Seq.newBuilder[String]
+        // Excluded nodes are appended but never expanded.
+        for (id <- frontier if !excluded(id); e <- incident.getOrElse(id, none)) {
+          val nbr = if (src(e) == id) dst(e) else src(e)
+          if (visited.add(nbr)) next += nbr
+        }
+        frontier = next.result()
+        i += 1
+      }
+      // Expanded set = visited \ exclude; emitted edges are incident to it.
+      val expanded = visited.filterNot(excluded)
+      val emitted = expanded.iterator.flatMap(incident.getOrElse(_, none)).toSet
+      // Kept edges: emitted, both endpoints visited.
+      val kept = emitted.filter(e => visited(src(e)) && visited(dst(e)))
+      // Result nodes: visited endpoints of emitted edges, plus expanded nodes
+      // with no incident edges at all.
+      val nodes = emitted.iterator.flatMap(e => Iterator(src(e), dst(e))).filter(visited)
+        .toSet ++ expanded.filterNot(incident.contains)
+      LocalResult(nodes.toSeq, kept.toSeq)
+    }
+  }
+
   /** Hop-growth curve (`offline_mode.md:60-103`): the [[extract]] node count
     * for every hop depth from 0 to the BFS fixpoint, plus one repeated entry
     * proving the fixpoint, from ONE bfs run instead of one extract per depth.
@@ -123,7 +183,7 @@ object Subgraph {
       .unionByName(edges.select($"dst".as("id"), $"src".as("nbr")))
     var visited = FreshCheckpoint(seeds.distinct.toDF("id"))
     var frontier = visited
-    val counts = scala.collection.mutable.ArrayBuffer[Long](visited.count())
+    val counts = mutable.ArrayBuffer[Long](visited.count())
     var done = false
     while (!done) {
       val next = FreshCheckpoint(frontier.join(adj, Seq("id"))

@@ -2,14 +2,16 @@ package graft.serve
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.atomic.AtomicLong
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.logging.log4j.LogManager
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.graph.Subgraph
+import graft.graph.{Analytics, Subgraph}
 import graft.query.{EntityQueries, SetiQueries}
 
 /** Thin HTTP facade over the engine's serving-layer queries: the three core
@@ -23,10 +25,20 @@ import graft.query.{EntityQueries, SetiQueries}
   * - `POST /api/graph/subgraph`               — n-hop subgraph, annotated
   *   (`flask_app.py:183-252`)
   *
-  * The JDK's built-in `HttpServer` keeps the shim dependency-free; per-request
-  * work runs the same library operators the offline paths use. This is an API
-  * facade, not a data-plane component: responses are dimension-sized by
+  * The JDK's built-in `HttpServer` keeps the shim dependency-free. This is an
+  * API facade, not a data-plane component: responses are dimension-sized by
   * construction (the reference's whole graph is ~17k nodes).
+  *
+  * Subgraph requests take one of two paths, chosen once at construction by
+  * the graph operators' driver-local gate: when the graph has at most
+  * `localCutoff` node ids (entities plus edge endpoints), every node and
+  * edge is annotated once at start-up and each request is a driver-local
+  * BFS plus rendering ([[LocalSubgraph]], no Spark job); a larger graph runs
+  * [[Subgraph.extract]], [[Subgraph.annotate]] and [[Subgraph.labelEdges]]
+  * per request. Both render the same bytes.
+  *
+  * Each request logs one line at INFO to this class's log4j logger: method,
+  * path, status, latency and the number of Spark jobs its job group ran.
   */
 class HttpShim(
     spark: SparkSession,
@@ -34,7 +46,8 @@ class HttpShim(
     edges: DataFrame,
     etextNested: Map[String, Map[String, Either[Seq[String], Map[String, Seq[String]]]]] = Map.empty,
     defaultHops: Int = 2,
-    dataDir: Option[String] = None) {
+    dataDir: Option[String] = None,
+    localCutoff: Long = Analytics.localThreshold) {
 
   import JsonOut.jstr
 
@@ -50,16 +63,36 @@ class HttpShim(
         .mkString("[", ", ", "]")
     }.toMap
 
-  /** Known-id set for the subgraph KeyError contract (`flask_app.py:247-249`):
-    * expanding an unknown center raises KeyError in the reference → 400. */
-  private val knownIds: Set[String] =
-    entities.select("id").collect().map(_.getString(0)).toSet
-
-  /** Work-entity ids (`flask_app.py:18` VALID_WORK_IDS) — the by_work
-    * validation set, distinct from the set of works that HAVE links. */
-  private val workIds: Set[String] =
-    entities.filter(col("type") === "work")
-      .select("id").collect().map(_.getString(0)).toSet
+  /** The driver-local subgraph state when the graph has at most
+    * `localCutoff` node ids, with the known-id set for the subgraph KeyError
+    * contract (`flask_app.py:247-249`: expanding an unknown center raises
+    * KeyError in the reference → 400) and the work-entity ids
+    * (`flask_app.py:18` VALID_WORK_IDS, the by_work validation set, distinct
+    * from the set of works that HAVE links). The gate reads its node count
+    * from the annotated node rows it collects, at most `localCutoff + 1` of
+    * them, so it runs no count; above the cutoff the ids come from one
+    * `(id, type)` collect. */
+  private val (local, knownIds, workIds): (Option[LocalSubgraph], Set[String], Set[String]) = {
+    val ids = entities.select(col("id"), lit(true).as("entity"))
+      .unionByName(edges.select(col("src").as("id"), lit(false).as("entity")))
+      .unionByName(edges.select(col("dst").as("id"), lit(false).as("entity")))
+      .where(col("id").isNotNull) // a CSV row without an ID; no request can name it
+      .groupBy("id").agg(max("entity").as("entity"))
+    val nodeRows = Subgraph.annotate(ids, entities, Nil, Nil)
+      .select("id", "entity", "type", "label", "aka", "social_ids", "dates",
+        "discipline", "disciplines")
+      .limit(math.min(localCutoff + 1, Int.MaxValue).toInt).collect()
+    val (local, typed) =
+      if (nodeRows.length <= localCutoff) {
+        val edgeRows = Subgraph.labelEdges(
+          edges.where(col("src").isNotNull && col("dst").isNotNull).distinct(), entities)
+          .collect()
+        (Some(new LocalSubgraph(nodeRows, edgeRows, etextNested)),
+          nodeRows.filter(_.getAs[Boolean]("entity")))
+      } else (None, entities.select("id", "type").collect())
+    (local, typed.map(_.getAs[String]("id")).toSet,
+      typed.filter(_.getAs[String]("type") == "work").map(_.getAs[String]("id")).toSet)
+  }
 
   /** `VALID_COLLECTIONS` (`flask_app.py:24`): collections observed in the
     * link data. */
@@ -190,14 +223,17 @@ class HttpShim(
       .find(!knownIds.contains(_))
       .foreach(id => return respond(ex, 400, errJson(s"Invalid ID: '$id'")))
 
-    val seeds = (authors ++ works).distinct
-    val result = Subgraph.extract(spark, edges, seeds, hops, exclude)
-    val annotated = Subgraph.annotate(result.nodes, entities, seeds, exclude)
-      .orderBy(col("id"))
-    val labeled = Subgraph.labelEdges(result.edges, entities)
-      .orderBy(col("source"), col("target"))
-    respond(ex, 200, JsonOut.subgraphResponse(
-      annotated, labeled, authors, works, hops, exclude, etextNested))
+    respond(ex, 200, local match {
+      case Some(l) => l.response(authors, works, hops, exclude)
+      case None =>
+        val seeds = (authors ++ works).distinct
+        val result = Subgraph.extract(spark, edges, seeds, hops, exclude)
+        val annotated = Subgraph.annotate(result.nodes, entities, seeds, exclude)
+          .orderBy(col("id"))
+        val labeled = Subgraph.labelEdges(result.edges, entities)
+          .orderBy(col("source"), col("target"))
+        JsonOut.subgraphResponse(annotated, labeled, authors, works, hops, exclude, etextNested)
+    })
   }
 
   // --- SETI namespace (`flask_app.py:259-454`) ---
@@ -418,12 +454,27 @@ class HttpShim(
 
   private def errJson(msg: String): String = s"""{"error": ${jstr(msg)}}"""
 
-  private def safely(ex: HttpExchange)(f: => Unit): Unit =
+  private val log = LogManager.getLogger(classOf[HttpShim])
+
+  /** Runs a handler under its own Spark job group, answers 500 on an
+    * uncaught error, and logs the request line. */
+  private def safely(ex: HttpExchange)(f: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val group = s"httpshim-${HttpShim.requestIds.incrementAndGet()}"
+    sc.setJobGroup(group, s"${ex.getRequestMethod} ${ex.getRequestURI.getPath}")
+    val t0 = System.nanoTime()
     try f catch {
       case t: Throwable =>
         try respond(ex, 500, errJson(Option(t.getMessage).getOrElse("internal error")))
         catch { case _: Throwable => () }
-    } finally ex.close()
+    } finally {
+      sc.clearJobGroup()
+      if (log.isInfoEnabled) log.info(f"${ex.getRequestMethod} ${ex.getRequestURI.getPath} " +
+        f"status=${ex.getResponseCode} ms=${(System.nanoTime() - t0) / 1e6}%.1f " +
+        s"jobs=${sc.statusTracker.getJobIdsForGroup(group).length}")
+      ex.close()
+    }
+  }
 
   private def queryParam(ex: HttpExchange, name: String): Option[String] =
     Option(ex.getRequestURI.getRawQuery).flatMap(_.split("&").collectFirst {
@@ -438,4 +489,9 @@ class HttpShim(
     ex.getResponseBody.write(bytes)
     ex.getResponseBody.close()
   }
+}
+
+object HttpShim {
+  /** Source of the per-request job group ids, unique across shims. */
+  private val requestIds = new AtomicLong()
 }

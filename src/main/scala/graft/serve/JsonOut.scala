@@ -96,7 +96,8 @@ object JsonOut {
   }
 
   /** Subgraph API response (`flask_app.py:232-245`): `{parameters, graph:
-    * {nodes[], edges[]}}` with the node/edge fields of `flask_app.py:211-230`.
+    * {nodes[], edges[]}}` with the node/edge fields of `flask_app.py:211-230`,
+    * from the annotated node and labeled edge relations, in their order.
     */
   def subgraphResponse(
       nodes: DataFrame,
@@ -106,41 +107,67 @@ object JsonOut {
       hops: Int,
       exclude: Seq[String],
       etextNested: Map[String, Map[String, Either[Seq[String], Map[String, Seq[String]]]]] = Map.empty): String = {
+    val nodeJson = nodes.collect().toSeq.map { r =>
+      subgraphNodeHead(r) + subgraphNodeTail(r.getAs[Boolean]("is_central"),
+        r.getAs[Boolean]("is_excluded"), nodeEtextJson(r.getAs[String]("id"), etextNested))
+    }
+    subgraphEnvelope(authors, works, hops, exclude, nodeJson, edges.collect().toSeq.map(subgraphEdge))
+  }
 
-    def opt(r: Row, field: String): String = {
-      val i = r.fieldIndex(field)
-      if (r.isNullAt(i)) "null" else jstr(r.getString(i))
+  // The pieces of a subgraph response. The driver-local serving path renders
+  // the request-independent ones once at start-up, the DataFrame overload
+  // above renders them per request; both call these.
+
+  /** A node's fields up to `disciplines`, from an annotated node row
+    * ([[graft.graph.Subgraph.annotate]] columns); [[subgraphNodeTail]]
+    * closes the object. */
+  private[serve] def subgraphNodeHead(r: Row): String =
+    Seq(
+      "\"id\": " + jstr(r.getAs[String]("id")),
+      "\"label\": " + optStr(r, "label"),
+      "\"type\": " + optStr(r, "type"),
+      "\"aka\": " + optStr(r, "aka"),
+      "\"social_ids\": " + optStr(r, "social_ids"),
+      "\"dates\": " + optStr(r, "dates"),
+      "\"discipline\": " + optStr(r, "discipline"),
+      "\"disciplines\": " + optStr(r, "disciplines")
+    ).mkString("{", ", ", "")
+
+  private def optStr(r: Row, field: String): String = {
+    val i = r.fieldIndex(field)
+    if (r.isNullAt(i)) "null" else jstr(r.getString(i))
+  }
+
+  /** The request-dependent node fields and the node's `etext_links` value
+    * ([[nodeEtextJson]]). */
+  private[serve] def subgraphNodeTail(isCentral: Boolean, isExcluded: Boolean,
+      etext: String): String =
+    s""", "is_central": $isCentral, "is_excluded": $isExcluded, "etext_links": $etext}"""
+
+  /** A node's `etext_links` value: its collection object, or `false` when it
+    * has no links (as the reference emits). */
+  private[serve] def nodeEtextJson(id: String,
+      etextNested: Map[String, Map[String, Either[Seq[String], Map[String, Seq[String]]]]]): String =
+    etextNested.get(id) match {
+      case Some(m) =>
+        val s = etextLinksJson(Map(id -> m))
+        s.substring(s.indexOf(':') + 2, s.length - 1) // inner object
+      case None => "false"
     }
-    val nodeJson = nodes.collect().map { r =>
-      val id = r.getAs[String]("id")
-      val etext = etextNested.get(id) match {
-        case Some(m) => etextLinksJson(Map(id -> m)) match {
-          case s => s.substring(s.indexOf(':') + 2, s.length - 1) // inner object
-        }
-        case None => "false" // reference emits `false` when absent
-      }
-      Seq(
-        "\"id\": " + jstr(id),
-        "\"label\": " + opt(r, "label"),
-        "\"type\": " + opt(r, "type"),
-        "\"aka\": " + opt(r, "aka"),
-        "\"social_ids\": " + opt(r, "social_ids"),
-        "\"dates\": " + opt(r, "dates"),
-        "\"discipline\": " + opt(r, "discipline"),
-        "\"disciplines\": " + opt(r, "disciplines"),
-        "\"is_central\": " + r.getAs[Boolean]("is_central"),
-        "\"is_excluded\": " + r.getAs[Boolean]("is_excluded"),
-        "\"etext_links\": " + etext
-      ).mkString("{", ", ", "}")
-    }
-    val edgeJson = edges.collect().map { r =>
-      Seq(
-        "\"source\": " + jstr(r.getAs[String]("source")),
-        "\"target\": " + jstr(r.getAs[String]("target")),
-        "\"relationship\": " + opt(r, "relationship")
-      ).mkString("{", ", ", "}")
-    }
+
+  /** One edge object, from a labeled edge row
+    * ([[graft.graph.Subgraph.labelEdges]] columns). */
+  private[serve] def subgraphEdge(r: Row): String =
+    Seq(
+      "\"source\": " + jstr(r.getAs[String]("source")),
+      "\"target\": " + jstr(r.getAs[String]("target")),
+      "\"relationship\": " + optStr(r, "relationship")
+    ).mkString("{", ", ", "}")
+
+  /** The response around rendered node and edge objects. */
+  private[serve] def subgraphEnvelope(authors: Seq[String], works: Seq[String], hops: Int,
+      exclude: Seq[String], nodes: Seq[String], edges: Seq[String]): String = {
     def arr(xs: Seq[String]) = xs.mkString("[", ", ", "]")
-    s"""{"parameters": {"authors": ${arr(authors.map(jstr))}, "works": ${arr(works.map(jstr))}, "hops": $hops, "exclude_list": ${arr(exclude.map(jstr))}}, "graph": {"nodes": ${arr(nodeJson.toSeq)}, "edges": ${arr(edgeJson.toSeq)}}}"""
+    s"""{"parameters": {"authors": ${arr(authors.map(jstr))}, "works": ${arr(works.map(jstr))}, "hops": $hops, "exclude_list": ${arr(exclude.map(jstr))}}, "graph": {"nodes": ${arr(nodes)}, "edges": ${arr(edges)}}}"""
   }
 }

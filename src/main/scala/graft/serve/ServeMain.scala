@@ -29,6 +29,9 @@ object ServeMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // keep the per-request lines (latency, Spark jobs) above Spark's WARN
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      classOf[HttpShim].getName, org.apache.logging.log4j.Level.INFO)
 
     val built = EntityBuilder.build(spark, entitiesCsv)
     val entities = built.entities.cache()

@@ -12,27 +12,40 @@ import graft.serve.{HttpShim, JsonOut}
 /** End-to-end drive of the HTTP facade (SURVEY §2.9 / `flask_app.py:95-252`):
   * a real server on an ephemeral port, hit over real HTTP, responses compared
   * byte-for-byte against the library's own serving-layer composition and the
-  * reference's documented error contracts. */
+  * reference's documented error contracts.
+  *
+  * Tests of reference data (golden subgraph, dropdowns, labels, SETI) serve
+  * the reference export ([[Fixtures]]); the rest serve the reference-free
+  * [[SyntheticExport]] graph. A shim is stopped only if a test started it, so
+  * a missing reference checkout fails its own tests and nothing else. */
 class HttpShimSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
 
   lazy val entities = Fixtures.built.entities
   lazy val edges = Fixtures.built.edges
+  lazy val synth = SyntheticExport.built
 
-  lazy val shim = new HttpShim(spark, entities, edges)
-  lazy val port: Int = shim.start(0)
+  private val started = scala.collection.mutable.ArrayBuffer.empty[HttpShim]
+  private def startShim(shim: HttpShim): Int = {
+    val p = shim.start(0)
+    started.synchronized(started += shim)
+    p
+  }
+
+  lazy val port: Int = startShim(new HttpShim(spark, entities, edges))
+  lazy val synthPort: Int = startShim(new HttpShim(spark, synth.entities, synth.edges))
   lazy val client: HttpClient = HttpClient.newHttpClient()
 
   override def afterAll(): Unit = {
-    shim.stop()
+    started.foreach(_.stop())
     super.afterAll()
   }
 
-  private def get(path: String): HttpResponse[String] =
+  private def get(path: String, port: => Int = port): HttpResponse[String] =
     client.send(
       HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path")).GET().build(),
       HttpResponse.BodyHandlers.ofString())
 
-  private def post(path: String, body: String): HttpResponse[String] =
+  private def post(path: String, body: String, port: => Int = port): HttpResponse[String] =
     client.send(
       HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
         .header("Content-Type", "application/json")
@@ -102,18 +115,20 @@ class HttpShimSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
   }
 
   test("POST /api/graph/subgraph: validation + KeyError contract") {
-    assert(post("/api/graph/subgraph", """{}""").body() ===
+    def sg(body: String) = post("/api/graph/subgraph", body, synthPort)
+    val work = SyntheticExport.chain(0)
+    assert(sg("""{}""").body() ===
       """{"error": "require either one or both of authors or works"}""")
-    assert(post("/api/graph/subgraph", """{"works": ["89000"], "hops": -1}""").body() ===
+    assert(sg(s"""{"works": ["$work"], "hops": -1}""").body() ===
       """{"error": "hops must be a non-negative integer"}""")
-    assert(post("/api/graph/subgraph", """{"works": ["89000"], "hops": "two"}""").statusCode() === 400)
+    assert(sg(s"""{"works": ["$work"], "hops": "two"}""").statusCode() === 400)
     // unknown center id → the reference's KeyError → 400 with str(e)
-    val unknown = post("/api/graph/subgraph", """{"works": ["99999999"], "hops": 1}""")
+    val unknown = sg("""{"works": ["99999999"], "hops": 1}""")
     assert(unknown.statusCode() === 400)
     assert(unknown.body() === """{"error": "Invalid ID: '99999999'"}""")
     // an unknown id that is EXCLUDED is never expanded → no KeyError (200)
-    val excluded = post("/api/graph/subgraph",
-      """{"works": ["89000", "99999999"], "hops": 1, "exclude_list": ["99999999"]}""")
+    val excluded = sg(
+      s"""{"works": ["$work", "99999999"], "hops": 1, "exclude_list": ["99999999"]}""")
     assert(excluded.statusCode() === 200)
   }
 
@@ -230,32 +245,32 @@ class HttpShimSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
     // /view renders initial_params straight from URL params; hops passes
     // through as the RAW STRING when provided (the reference does no int
     // conversion on this route) and as the config integer when absent
-    val ok = get("/view?works=89000,89001&authors=&hops=3&exclude_list=41324")
+    val ok = get("/view?works=89000,89001&authors=&hops=3&exclude_list=41324", synthPort)
     assert(ok.statusCode() === 200, ok.body())
     assert(ok.body() ===
       """{"initial_params": {"authors": [], "works": ["89000", "89001"], """ +
         """"hops": "3", "exclude_list": ["41324"]}}""")
-    assert(get("/view").body() ===
+    assert(get("/view", synthPort).body() ===
       """{"initial_params": {"authors": [], "works": [], "hops": 2, "exclude_list": []}}""")
     // validation: digits+commas only (blank allowed), exact reference message
-    val bad = get("/view?authors=x1")
+    val bad = get("/view?authors=x1", synthPort)
     assert(bad.statusCode() === 400)
     assert(bad.body() === s"""{"error": "${EntityQueries.errChars}"}""")
     // Python-truthiness quirk: whitespace-only param is truthy, strips to ""
     // and splits to one empty segment
-    assert(get("/view?works=%20").body() ===
+    assert(get("/view?works=%20", synthPort).body() ===
       """{"initial_params": {"authors": [], "works": [""], "hops": 2, "exclude_list": []}}""")
     // interior empties survive the split
-    assert(get("/view?works=1,,2").body().contains(""""works": ["1", "", "2"]"""))
+    assert(get("/view?works=1,,2", synthPort).body().contains(""""works": ["1", "", "2"]"""))
     // '/' serves the uninitialized entry; other root paths are unknown
-    assert(get("/").body() === """{"initial_params": null}""")
-    assert(get("/nope").statusCode() === 404)
+    assert(get("/", synthPort).body() === """{"initial_params": null}""")
+    assert(get("/nope", synthPort).statusCode() === 404)
   }
 
   test("GET /data/<path>: static passthrough with traversal protection") {
     val dir = java.nio.file.Files.createTempDirectory("shimdata")
     java.nio.file.Files.writeString(dir.resolve("x.json"), """{"k": 1}""")
-    val dataShim = new HttpShim(spark, entities, edges, dataDir = Some(dir.toString))
+    val dataShim = new HttpShim(spark, synth.entities, synth.edges, dataDir = Some(dir.toString))
     val p = dataShim.start(0)
     try {
       def fetch(path: String) = client.send(
@@ -282,13 +297,20 @@ class HttpShimSpec extends SparkTestBase with org.scalatest.BeforeAndAfterAll {
   }
 
   test("POST subgraph without hops uses the config default (flask_app.py:196)") {
-    val cfg = graft.serve.AppMeta.loadConfig("/root/reference/config.json")
-    val cfgShim = new HttpShim(spark, entities, edges, defaultHops = cfg.hops)
+    // the reference's config.json shape, with a hops value that is not the
+    // shim's own default
+    val cfgFile = java.nio.file.Files.createTempFile("config", ".json")
+    java.nio.file.Files.writeString(cfgFile, s"""{"authors": [], "works": ["${SyntheticExport.chain(0)}"], """ +
+      """"hops": 3, "exclude_list": [], "draw_networkx_graph": false, """ +
+      """"networkx_figure_size": [20, 20], "output_gephi_file": false}""")
+    val cfg = graft.serve.AppMeta.loadConfig(cfgFile.toString)
+    assert(cfg.hops === 3)
+    val cfgShim = new HttpShim(spark, synth.entities, synth.edges, defaultHops = cfg.hops)
     val p = cfgShim.start(0)
     try {
       val res = client.send(
         HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$p/api/graph/subgraph"))
-          .POST(HttpRequest.BodyPublishers.ofString("""{"works": ["89000"]}"""))
+          .POST(HttpRequest.BodyPublishers.ofString(s"""{"works": ["${cfg.works.head}"]}"""))
           .build(),
         HttpResponse.BodyHandlers.ofString())
       assert(res.statusCode() === 200)

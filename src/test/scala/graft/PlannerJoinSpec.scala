@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
 import graft.graph.Analytics
@@ -15,33 +11,15 @@ import graft.ops.TextAnalysis
   * from its measured bytes, not from the corpus it was aggregated from. */
 class PlannerJoinSpec extends SparkTestBase {
 
-  /** `build`'s result and the Spark jobs submitted while it ran. Its jobs
-    * carry a fresh job group; a marker job in a second group, once the
-    * listener sees it, proves every earlier job-start event was delivered
-    * (the listener's bus queue is FIFO). */
+  /** `build`'s result and the Spark jobs submitted while it ran: its jobs
+    * carry a fresh job group. */
   private def jobsDuring[T](build: => T): (T, Int) = {
     val sc = spark.sparkContext
     val group = s"build-${java.util.UUID.randomUUID()}"
-    val marker = s"marker-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger(0)
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case `marker` => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
+    groupJobsDuring(_ == group) {
       sc.setJobGroup(group, "operator construction")
-      val out = try build finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener drain")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(30, TimeUnit.SECONDS), "marker job never reached the listener")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
+      try build finally sc.clearJobGroup()
+    }
   }
 
   import spark.implicits._

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,6 +24,33 @@ trait SparkTestBase extends AnyFunSuite {
     val prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try f finally spark.conf.set(key, prev)
+  }
+
+  /** `f`'s result and the number of Spark jobs started while it ran, from
+    * any thread, whose job group `counted` accepts. A marker job in a group
+    * of its own, once the listener sees it, proves every earlier job-start
+    * event was delivered (the listener's bus queue is FIFO). */
+  def groupJobsDuring[T](counted: String => Boolean)(f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger(0)
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
+          case `marker` => drained.countDown()
+          case g: String if counted(g) => jobs.incrementAndGet()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = f
+      sc.setJobGroup(marker, "listener drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(30, TimeUnit.SECONDS), "marker job never reached the listener")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   val refData = "/root/reference/data"
