@@ -5,11 +5,12 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.serve.AppMeta
 
 /** Config/VERSION scans (SURVEY §2 S11–S12) against the reference's own
-  * committed files. */
+  * committed files, read through [[Fixtures.assumeFile]]: a missing
+  * checkout cancels those two tests. */
 class AppMetaSpec extends AnyFunSuite {
 
   test("config.json defaults parse (utils.py:9-13)") {
-    val c = AppMeta.loadConfig("/root/reference/config.json")
+    val c = AppMeta.loadConfig(Fixtures.assumeFile(s"${Fixtures.referenceDir}/config.json"))
     assert(c.authors === Seq("85303", "85201"))
     assert(c.works === Seq("89000", "88590"))
     assert(c.hops === 1)
@@ -20,7 +21,7 @@ class AppMetaSpec extends AnyFunSuite {
   }
 
   test("VERSION line-positional parse (utils.py:32-50)") {
-    val v = AppMeta.loadVersions("/root/reference/VERSION")
+    val v = AppMeta.loadVersions(Fixtures.assumeFile(s"${Fixtures.referenceDir}/VERSION"))
     assert(v.app === "2.6.0")
     assert(v.panditData === "2025-11-07")
     assert(v.setiData === "2025-11-07")

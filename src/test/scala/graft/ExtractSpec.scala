@@ -4,14 +4,17 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.Extract
 
+/** Extract-stage semantics. The manual-cleaning test reproduces the
+  * reference checkout's cleaned CSV from its raw CSV, both read through
+  * [[Fixtures.assumeFile]], so a missing checkout cancels it. */
 class ExtractSpec extends SparkTestBase {
 
   test("manual cleaning reproduces the committed cleaned CSV exactly") {
     import spark.implicits._
     val ours = Extract.manualCleaning(spark,
-      s"$refData/2025-11-07-extracted-entities-raw.csv")
+      Fixtures.assumeFile(s"$refData/2025-11-07-extracted-entities-raw.csv"))
       .as[String].collect()
-    val ref = spark.read.textFile(s"$refData/2025-11-07-extracted-entities-cleaned.csv")
+    val ref = spark.read.textFile(Fixtures.assumeFile(Fixtures.cleanedCsv))
       .collect()
     assert(ours.length === ref.length)
     assert(ours.toSet === ref.toSet)

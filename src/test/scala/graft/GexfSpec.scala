@@ -5,26 +5,29 @@ import org.apache.spark.sql.functions._
 import graft.serve.Gexf
 
 /** GEXF sink (SURVEY S9): well-formed XML, node/edge fidelity, color scheme,
-  * escaping — parsed back with the JDK's namespace-aware DOM parser. */
+  * escaping — parsed back with the JDK's namespace-aware DOM parser. The
+  * full-graph test renders the synthetic export, and the reference export
+  * where its checkout is present; the rest build their own tiny graphs. */
 class GexfSpec extends SparkTestBase {
 
   test("full-graph GEXF round-trips through an XML parser") {
-    val built = Fixtures.built
-    val nodes = built.entities.select(col("id"), col("name").as("label"),
-      when(col("type") === "work", "red").otherwise("green").as("color"))
-    val edges = built.edges
-    val xml = Gexf.render(nodes, edges)
+    Fixtures.onEachExport { built =>
+      val nodes = built.entities.select(col("id"), col("name").as("label"),
+        when(col("type") === "work", "red").otherwise("green").as("color"))
+      val edges = built.edges
+      val xml = Gexf.render(nodes, edges)
 
-    val dbf = javax.xml.parsers.DocumentBuilderFactory.newInstance()
-    dbf.setNamespaceAware(true)
-    val doc = dbf.newDocumentBuilder()
-      .parse(new java.io.ByteArrayInputStream(xml.getBytes("UTF-8")))
-    val nNodes = doc.getElementsByTagNameNS("*", "node").getLength
-    val nEdges = doc.getElementsByTagNameNS("*", "edge").getLength
-    assert(nNodes === built.entities.count())
-    assert(nEdges === built.edges.count())
-    val nColors = doc.getElementsByTagNameNS("*", "color").getLength
-    assert(nColors === nNodes, "every node carries a viz color")
+      val dbf = javax.xml.parsers.DocumentBuilderFactory.newInstance()
+      dbf.setNamespaceAware(true)
+      val doc = dbf.newDocumentBuilder()
+        .parse(new java.io.ByteArrayInputStream(xml.getBytes("UTF-8")))
+      val nNodes = doc.getElementsByTagNameNS("*", "node").getLength
+      val nEdges = doc.getElementsByTagNameNS("*", "edge").getLength
+      assert(nNodes === built.entities.count())
+      assert(nEdges === built.edges.count())
+      val nColors = doc.getElementsByTagNameNS("*", "color").getLength
+      assert(nColors === nNodes, "every node carries a viz color")
+    }
   }
 
   test("layout coordinates emit as viz:position (Gephi opens pre-laid-out)") {

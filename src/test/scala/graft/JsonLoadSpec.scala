@@ -8,32 +8,38 @@ import graft.etl.{JsonLoad, LinkBuilder}
 import graft.serve.JsonOut
 
 /** JSON source/sink coverage (SURVEY §2.1 S4/S5/S7):
-  *  - entities: sink → scan roundtrip is lossless;
+  *  - entities: sink → scan roundtrip is lossless, on the synthetic export
+  *    and on the reference export where its checkout is present;
   *  - links: scanning the reference's own committed JSON artifact reproduces
-  *    our ETL's flat relation (the independent-path cross-check).
+  *    our ETL's flat relation (the independent-path cross-check). These read
+  *    the checkout's SETI CSV and link JSON through [[Fixtures.assumeFile]],
+  *    so a missing checkout cancels them.
   */
 class JsonLoadSpec extends SparkTestBase {
 
   test("entities JSON sink → scan roundtrip is lossless") {
-    val entities = Fixtures.built.entities
-    val json = JsonOut.entitiesJson(entities)
-    val f = Files.createTempFile("entities", ".json")
-    Files.writeString(f, json)
-    val back = JsonLoad.entities(spark, f.toString)
-    assert(back.count() === entities.count())
-    // canonical per-row fingerprint over every column, nulls marked
-    def canon(df: org.apache.spark.sql.DataFrame) = df.select(
-      concat_ws("|", df.columns.sorted.map(c =>
-        coalesce(col(c).cast("string"), lit("<null>"))): _*)).collect()
-      .map(_.getString(0)).sorted
-    assert(canon(back).sameElements(canon(entities)))
-    Files.delete(f)
+    Fixtures.onEachExport { built =>
+      val entities = built.entities
+      val json = JsonOut.entitiesJson(entities)
+      val f = Files.createTempFile("entities", ".json")
+      Files.writeString(f, json)
+      val back = JsonLoad.entities(spark, f.toString)
+      assert(back.count() === entities.count())
+      // canonical per-row fingerprint over every column, nulls marked
+      def canon(df: org.apache.spark.sql.DataFrame) = df.select(
+        concat_ws("|", df.columns.sorted.map(c =>
+          coalesce(col(c).cast("string"), lit("<null>"))): _*)).collect()
+        .map(_.getString(0)).sorted
+      assert(canon(back).sameElements(canon(entities)))
+      Files.delete(f)
+    }
   }
 
   test("link JSON scan reproduces the ETL's flat relation") {
     val scanned = JsonLoad.etextLinks(spark,
-      s"$refData/2025-11-07-etext-link-data.json").localCheckpoint(true)
-    val built = LinkBuilder.build(spark, s"$refData/2025-11-07-seti-master.csv")
+      Fixtures.assumeFile(s"$refData/2025-11-07-etext-link-data.json")).localCheckpoint(true)
+    val built = LinkBuilder.build(spark,
+      Fixtures.assumeFile(s"$refData/2025-11-07-seti-master.csv"))
     val ours = built.links.localCheckpoint(true)
     // (workId, collection, link) — subtype-independent view matches exactly
     def triples(df: org.apache.spark.sql.DataFrame) =
@@ -60,10 +66,11 @@ class JsonLoadSpec extends SparkTestBase {
 
   test("link JSON count side-tables scan matches the ETL's") {
     val scanned = JsonLoad.collectionCounts(spark,
-      s"$refData/2025-11-07-etext-link-data.json").collect()
+      Fixtures.assumeFile(s"$refData/2025-11-07-etext-link-data.json")).collect()
       .map(r => r.getAs[String]("collection") ->
         (r.getAs[Long]("etexts"), r.getAs[Long]("etexts_missing_works"))).toMap
-    val built = LinkBuilder.build(spark, s"$refData/2025-11-07-seti-master.csv")
+    val built = LinkBuilder.build(spark,
+      Fixtures.assumeFile(s"$refData/2025-11-07-seti-master.csv"))
     val ours = built.collectionCounts.collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(scanned === ours)

@@ -10,10 +10,17 @@ import graft.serve.JsonOut
   * reference's own output on the committed CSV (verified byte-identical when
   * re-running the reference ETL). We compare our flat relation re-nested
   * through the serialization layer against it, structurally.
+  *
+  * The two parity tests read the checkout's SETI CSV and link JSON through
+  * [[Fixtures.assumeFile]], so a missing checkout cancels them. The summary
+  * test runs on the synthetic SETI master CSV ([[SyntheticExport.setiCsv]]),
+  * and on the reference CSV where the checkout is present.
   */
 class LinkBuilderSpec extends SparkTestBase {
 
-  lazy val built = LinkBuilder.build(spark, s"$refData/2025-11-07-seti-master.csv")
+  val refSeti = s"$refData/2025-11-07-seti-master.csv"
+
+  lazy val built = LinkBuilder.build(spark, Fixtures.assumeFile(refSeti))
 
   private def norm(j: JValue): Any = j match {
     case JObject(fields) => fields.map { case (k, v) => k -> norm(v) }.toMap
@@ -29,7 +36,7 @@ class LinkBuilderSpec extends SparkTestBase {
 
   lazy val committed: Map[String, Any] = {
     val txt = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$refData/2025-11-07-etext-link-data.json"))
+      java.nio.file.Paths.get(Fixtures.assumeFile(s"$refData/2025-11-07-etext-link-data.json")))
     norm(JsonMethods.parse(txt)).asInstanceOf[Map[String, Any]]
   }
 
@@ -57,14 +64,17 @@ class LinkBuilderSpec extends SparkTestBase {
   }
 
   test("SETI summary: coverage truncation and works-desc ordering") {
-    val summary = graft.query.SetiQueries.summary(built.links, built.collectionCounts)
-      .collect()
-    val works = summary.map(_.getAs[Long]("works"))
-    assert(works.sameElements(works.sortBy(-_)), "ordered by works desc")
-    summary.foreach { r =>
-      val cov = r.getAs[Double]("etext_coverage")
-      val et = r.getAs[Long]("etexts"); val miss = r.getAs[Long]("etexts_missing_works")
-      assert(cov === math.floor((et - miss).toDouble / et * 1000) / 10)
+    Fixtures.onEach(LinkBuilder.build(spark, SyntheticExport.setiCsv),
+        LinkBuilder.build(spark, refSeti), refSeti) { built =>
+      val summary = graft.query.SetiQueries.summary(built.links, built.collectionCounts)
+        .collect()
+      val works = summary.map(_.getAs[Long]("works"))
+      assert(works.sameElements(works.sortBy(-_)), "ordered by works desc")
+      summary.foreach { r =>
+        val cov = r.getAs[Double]("etext_coverage")
+        val et = r.getAs[Long]("etexts"); val miss = r.getAs[Long]("etexts_missing_works")
+        assert(cov === math.floor((et - miss).toDouble / et * 1000) / 10)
+      }
     }
   }
 }

@@ -7,7 +7,8 @@ import graft.serve.LinkLabels
 
 /** P16 — presentation-layer link labels, server-side: rule-for-rule cases
   * mirroring `static/js/graph.js:254-338`, then the full committed link
-  * relation (every link labels without error; spot values from the data).
+  * relation (every link labels without error; spot values from the data),
+  * read through [[Fixtures.assumeFile]]: a missing checkout cancels that test.
   */
 class LinkLabelsSpec extends SparkTestBase {
 
@@ -68,11 +69,10 @@ class LinkLabelsSpec extends SparkTestBase {
   }
 
   test("every committed reference link labels; known spot value") {
-    val links = JsonLoad.etextLinksIndexed(spark,
-      s"$refData/2025-11-07-etext-link-data.json").localCheckpoint(true)
+    val json = Fixtures.assumeFile(s"$refData/2025-11-07-etext-link-data.json")
+    val links = JsonLoad.etextLinksIndexed(spark, json).localCheckpoint(true)
     // indexed loader agrees with the flat loader on the triple relation
-    val flat = JsonLoad.etextLinks(spark,
-      s"$refData/2025-11-07-etext-link-data.json")
+    val flat = JsonLoad.etextLinks(spark, json)
     def triples(df: org.apache.spark.sql.DataFrame) =
       df.select("workId", "collection", "link").distinct().collect()
         .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet

@@ -5,7 +5,10 @@ import java.nio.file.{Files, Path}
 
 import scala.util.Random
 
+import org.apache.spark.sql.functions.col
+
 import graft.etl.EntityBuilder
+import graft.model.Schemas
 
 /** A small seeded Pandit-shaped export, written as a cleaned-entities CSV
   * (FIXTURES.md §1 header) and built by [[EntityBuilder]], for suites that
@@ -19,7 +22,10 @@ import graft.etl.EntityBuilder
   * isolated work, a workless person listed as a base text (an edge endpoint
   * with no entity row), a repeated row, ids whose string order is not their
   * numeric order, and two ids whose UTF-8 order differs from their UTF-16
-  * order. */
+  * order.
+  *
+  * [[setiRows]] is a SETI master CSV over the same work ids, for the SETI
+  * link and query suites. */
 object SyntheticExport {
 
   val header: Seq[String] = Seq("Content type", "ID", "Name", "Aka",
@@ -116,6 +122,62 @@ object SyntheticExport {
     val b = EntityBuilder.build(SparkTestBase.session, csv.toString)
     EntityBuilder.Built(b.entities.localCheckpoint(true), b.edges.localCheckpoint(true))
   }
+
+  /** The author with the most `wrote` edges in [[built]], ties broken by id:
+    * the synthetic counterpart of the reference's prolific author 40377. */
+  lazy val hub: String = built.edges.filter(col("etype") === Schemas.Wrote)
+    .groupBy(col("src")).count()
+    .orderBy(col("count").desc, col("src")).head().getString(0)
+
+  private val setiHeader: Seq[String] = Seq("Collection", "Text Name", "Alternative Text Names",
+    "Author Name", "Alternative Author Names", "File Size (kb)",
+    "Link 1 (main)", "Link 2 (underlying)", "Link 3 (extract)", "Work ID", "Author ID")
+
+  /** SETI master CSV rows (FIXTURES.md §2 header, without it) over the work
+    * ids of [[rows]]: 20 seeded single-link rows, each in GRETIL, DCS or
+    * SARIT, then the planted shapes (FIXTURES.md §2a): works in both GRETIL
+    * and DCS, a DCS row with all three link columns (a multi-subtype
+    * collection), a `Work ID` cell of two ids split on a newline, a `...`
+    * placeholder row, and SARIT works that have authors. */
+  def setiRows(seed: Long): Seq[Seq[String]] = {
+    val rnd = new Random(seed)
+    val names = rows(seed).collect { case r if r.head == "Work" => r(1) -> r(2) }.toMap
+    val workIds = names.keys.toSeq.sorted
+    def row(collection: String, ids: Seq[String], links: String*): Seq[String] = {
+      val slug = collection.toLowerCase
+      val cells = links.map(l => s"https://$slug.example.org/$l").padTo(3, "")
+      Seq(collection, ids.map(names.getOrElse(_, "Ajñāta")).mkString("; "), "", "", "",
+        s"${5 + rnd.nextInt(900)}.${rnd.nextInt(10)}") ++ cells ++
+        Seq(ids.mkString("\n"), "")
+    }
+    val seeded = (0 until 20).map { i =>
+      val collection = Seq("GRETIL", "DCS", "SARIT")(rnd.nextInt(3))
+      row(collection, Seq(workIds(rnd.nextInt(workIds.size))), s"text/$i.htm")
+    }
+    val planted = Seq(
+      row("GRETIL", Seq(chain(0)), "mula.htm"),
+      row("DCS", Seq(chain(0)), "mula.html", "conllu/mula", "txt/mula.txt"),
+      row("GRETIL", Seq(chain(1)), "tika.htm"),
+      row("DCS", Seq(chain(1)), "tika.html"),
+      row("GRETIL", Seq(chain(2), cycle(1)), "anutika.htm"),
+      row("GRETIL", Seq("..."), "unmatched.htm"),
+      row("SARIT", Seq(selfLoop), "svavrtti.xml", "svavrtti-gh.xml"),
+      row("SARIT", Seq(oddIds(2)), "purna.xml"))
+    seeded ++ planted
+  }
+
+  /** Writes the SETI master CSV for `seed` into `dir`; returns its path. */
+  def writeSeti(dir: Path, seed: Long): Path = {
+    val out = dir.resolve(s"synthetic-seti-master-$seed.csv")
+    Files.writeString(out,
+      (csvLine(setiHeader) +: setiRows(seed).map(csvLine)).mkString("\n") + "\n",
+      StandardCharsets.UTF_8)
+    out
+  }
+
+  /** Path of the SETI master CSV for seed 7, written once per JVM. */
+  lazy val setiCsv: String =
+    writeSeti(Files.createTempDirectory("synthetic-seti"), 7).toString
 
   /** E-text links for a few works, both nested shapes. */
   val etext: Map[String, Map[String, Either[Seq[String], Map[String, Seq[String]]]]] = Map(
