@@ -28,16 +28,17 @@ object Analytics {
     * that would cost min-label propagation O(n) shuffle rounds finishes in
     * ~log n. Component id = min entity id (natural column order) reachable.
     *
+    * At or below `localCutoff` vertices (default
+    * [[graft.Limits.dimensionRows]]), components are solved on collected
+    * driver arrays (union-find, exact, no per-round scheduling): any
+    * iterative distributed scheme costs per-round stage scheduling, which
+    * for dimension-sized graphs is pure overhead. LS/SS remains the scale
+    * path.
+    *
     * @return (id, component) — component = min id in the component.
     */
-  /** Below this vertex count, components are solved on collected driver
-    * arrays (union-find, exact, no per-round scheduling): any iterative
-    * distributed scheme costs per-round stage scheduling, which for
-    * dimension-sized graphs is pure overhead. LS/SS remains the scale path. */
-  val localThreshold: Long = graft.Limits.dimensionRows
-
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
-      localCutoff: Long = localThreshold): DataFrame = {
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
     val n = vertices.count()
     if (n <= localCutoff && n > 0) return ccLocal(vertices, edges)
     ccLargeSmallStar(vertices, edges)._1
@@ -99,7 +100,7 @@ object Analytics {
     (labels, rounds)
   }
 
-  /** Driver-local union-find (n ≤ [[localThreshold]]). Component label =
+  /** Driver-local union-find (n ≤ [[graft.Limits.dimensionRows]]). Component label =
     * min member id under the id column's natural ordering — identical to the
     * distributed loop's `min()` semantics for string/long/int ids. */
   private def ccLocal(vertices: DataFrame, edges: DataFrame): DataFrame = {
@@ -335,7 +336,7 @@ object Analytics {
     // probe measured 38× at 10× data crossing the broadcast→shuffle flip,
     // with the 6 GB payload sort as the dominant term.
     val hint: DataFrame => DataFrame =
-      if (deg.count() <= localThreshold) broadcast(_) else _.hint("shuffle_hash")
+      if (deg.count() <= graft.Limits.dimensionRows) broadcast(_) else _.hint("shuffle_hash")
     val withDeg = e
       .join(hint(deg.withColumnRenamed("id", "a").withColumnRenamed("deg", "da")), Seq("a"))
       .join(hint(deg.withColumnRenamed("id", "b").withColumnRenamed("deg", "db")), Seq("b"))
@@ -383,7 +384,7 @@ object Analytics {
     // scale path pins ShuffledHashJoin for the same payload-sort reason as
     // triangleCount (build side = node-sized relation / parts per task)
     val hint: DataFrame => DataFrame =
-      if (deg.count() <= localThreshold) broadcast(_) else _.hint("shuffle_hash")
+      if (deg.count() <= graft.Limits.dimensionRows) broadcast(_) else _.hint("shuffle_hash")
     val withDeg = e
       .join(hint(deg.select(col("id").as("a"), col("deg").as("da"))), Seq("a"))
       .join(hint(deg.select(col("id").as("b"), col("deg").as("db"))), Seq("b"))
@@ -419,7 +420,7 @@ object Analytics {
     * synchronous Bellman-Ford, a FIXED number of relaxation rounds
     * (deterministic — replayable round-by-round by the SQL oracle; pick
     * rounds ≥ the graph's weighted-hop diameter for exact distances).
-    * Below [[localThreshold]] collected vertices the rounds run on driver
+    * Below [[graft.Limits.dimensionRows]] collected vertices the rounds run on driver
     * arrays (same semantics, no per-round stage scheduling); the distributed
     * loop is one shuffle per round on (id) with [[FreshCheckpoint]].
     *
@@ -427,7 +428,7 @@ object Analytics {
     * @return (id, dist) for vertices reached within `rounds` relaxations.
     */
   def sssp(edges: DataFrame, src: Long, rounds: Int,
-      localCutoff: Long = localThreshold): DataFrame = {
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val n = edges.select($"a".as("id"))
@@ -461,14 +462,14 @@ object Analytics {
     * (deterministic and SQL-replayable, like [[sssp]]): each round removes
     * every vertex whose degree within the surviving subgraph is < k. With
     * rounds ≥ the peel depth this is the exact k-core. Below
-    * [[localThreshold]] vertices the peel runs on collected driver arrays;
+    * [[graft.Limits.dimensionRows]] vertices the peel runs on collected driver arrays;
     * the distributed loop is one degree-aggregation shuffle per round.
     *
     * @param edges undirected as directed-both-ways (a, b).
     * @return (id, deg) — survivors with their degree inside the final core.
     */
   def kcore(edges: DataFrame, k: Int, rounds: Int,
-      localCutoff: Long = localThreshold): DataFrame = {
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     val und = FreshCheckpoint(edges.select($"a", $"b").distinct())
@@ -532,7 +533,7 @@ object Analytics {
     * hub degree, shuffle-on-key all the way, O(steps) rounds.
     *
     * Adaptive like the centralities: on dimension-sized LONG-id graphs
-    * (≤ [[localThreshold]] vertices) the walk runs on collected sorted
+    * (≤ [[graft.Limits.dimensionRows]] vertices) the walk runs on collected sorted
     * adjacency arrays — identical md5 arithmetic, so results are
     * bit-identical to the distributed loop — because 2·steps join rounds of
     * stage scheduling dwarf the arithmetic there. Non-long id types always
@@ -543,7 +544,7 @@ object Analytics {
     * @return (walker, step, node) — step 0 is the start vertex.
     */
   def deterministicWalks(edges: DataFrame, steps: Int,
-      localCutoff: Long = localThreshold): DataFrame = {
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
     if (edges.schema("a").dataType == org.apache.spark.sql.types.LongType &&
         edges.schema("b").dataType == org.apache.spark.sql.types.LongType) {
       val und = edges.select(col("a"), col("b")).distinct()
@@ -600,7 +601,7 @@ object Analytics {
   }
 
   /** Driver-local walks over collected sorted adjacency (long ids,
-    * n ≤ [[localThreshold]]): same md5(walker:s) % deg index arithmetic —
+    * n ≤ [[graft.Limits.dimensionRows]]): same md5(walker:s) % deg index arithmetic —
     * `Long.parseLong(hex(md5)[0,15), 16)` ≡ `conv(substring(md5, 1, 15),
     * 16, 10)` for 60-bit values — over the same ascending-neighbor order,
     * so output is bit-identical to the distributed loop. */

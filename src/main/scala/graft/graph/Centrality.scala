@@ -12,10 +12,10 @@ import scala.collection.mutable
   * - eigenvector: distributed power iteration — one shuffle per round,
   *   L2-normalized, None-on-non-convergence contract like the reference
   *   (`utils/analyze.py:169-174`).
-  * - betweenness: adaptive Brandes. At dimension scale (≤ localThreshold,
-  *   like the reference's 17k nodes) the adjacency is broadcast once and
-  *   each partition of sources runs independent exact single-source passes,
-  *   partial scores summed by key. Above the threshold nothing touches the
+  * - betweenness: adaptive Brandes. At dimension scale
+  *   (≤ `Limits.dimensionRows`, like the reference's 17k nodes) the
+  *   adjacency is broadcast once and each partition of sources runs
+  *   independent exact single-source passes, partial scores summed by key. Above the threshold nothing touches the
   *   driver: k-sampled Brandes runs as level-synchronous DataFrame joins
   *   (forward BFS for sigma, backward accumulation for delta).
   */
@@ -41,20 +41,20 @@ object Centrality {
     * convention), L2-normalized each round.
     * Returns None if |x_t - x_{t-1}|_1 > n*tol after maxIter rounds
     * (the reference catches PowerIterationFailedConvergence → None).
+    *
+    * At or below `localCutoff` vertices (default
+    * [[graft.Limits.dimensionRows]]) the iteration runs on collected driver
+    * arrays (exact nx L1 semantics, no per-round stage scheduling); above it,
+    * the distributed join loop. Dimension-sized graphs — like the
+    * reference's 17k nodes — cost ~10 Spark stages *per power-iteration
+    * round* in the distributed formulation, all scheduling overhead.
     */
-  /** Below this vertex count the iteration runs on collected driver arrays
-    * (exact nx L1 semantics, no per-round stage scheduling); above it, the
-    * distributed join loop. Dimension-sized graphs — like the reference's
-    * 17k nodes — cost ~10 Spark stages *per power-iteration round* in the
-    * distributed formulation, all scheduling overhead. */
-  val localThreshold: Long = graft.Limits.dimensionRows
-
   def eigenvector(
       vertices: DataFrame,
       edges: DataFrame,
       maxIter: Int = 100,
       tol: Double = 1e-6,
-      localCutoff: Long = localThreshold): Option[DataFrame] = {
+      localCutoff: Long = graft.Limits.dimensionRows): Option[DataFrame] = {
     val spark = vertices.sparkSession
     import spark.implicits._
     val n = vertices.count()
@@ -124,7 +124,7 @@ object Centrality {
       vertices: DataFrame,
       edges: DataFrame,
       iters: Int,
-      localCutoff: Long = localThreshold): DataFrame = {
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
     val spark = vertices.sparkSession
     import spark.implicits._
     val n = vertices.count()
@@ -184,7 +184,7 @@ object Centrality {
       edges: DataFrame,
       iters: Int = 20,
       damping: Double = 0.85,
-      localCutoff: Long = localThreshold): DataFrame = {
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
     val spark = vertices.sparkSession
     import spark.implicits._
     val n = vertices.count()
@@ -192,15 +192,13 @@ object Centrality {
     if (n <= localCutoff && n > 0) {
       val ids = vertices.select(col("id")).collect().map(_.get(0)).toIndexedSeq
       val idx = ids.zipWithIndex.toMap
-      val es = edges.select(col("src"), col("dst")).collect()
-        .flatMap { r =>
-          (idx.get(r.get(0)), idx.get(r.get(1))) match {
-            case (Some(s), Some(d)) => Some((s, d))
-            case _ => None
-          }
-        }
+      // outdeg counts every edge whose src is a vertex, its dst one or not,
+      // as the distributed loop does (see pprLocal)
+      val raw = edges.select(col("src"), col("dst")).collect()
+        .flatMap(r => idx.get(r.get(0)).map(s => (s, idx.get(r.get(1)))))
       val outdeg = new Array[Long](ids.length)
-      es.foreach { case (s, _) => outdeg(s) += 1 }
+      raw.foreach { case (s, _) => outdeg(s) += 1 }
+      val es = raw.collect { case (s, Some(d)) => (s, d) }
       var x = Array.fill(ids.length)(1.0 / n)
       var it = 0
       while (it < iters) {
@@ -234,7 +232,8 @@ object Centrality {
         val dangling =
           x.filter($"outdeg" === 0).agg(sum($"score")).as[Option[Double]].head().getOrElse(0.0)
         val contrib = e.join(
-            x.select($"id".as("src"), ($"score" / $"outdeg").as("c")), Seq("src"))
+            x.filter($"outdeg" > 0) // dangling rows: no out-edges, and ANSI mode rejects the 0-divisor
+              .select($"id".as("src"), ($"score" / $"outdeg").as("c")), Seq("src"))
           .groupBy($"dst".as("id")).agg(sum($"c").as("inc"))
         val next = x.select($"id", $"outdeg").join(contrib, Seq("id"), "left")
           .select($"id", $"outdeg",
@@ -265,7 +264,7 @@ object Centrality {
       seeds: DataFrame,
       iters: Int = 8,
       damping: Double = 0.85,
-      localCutoff: Long = localThreshold): DataFrame = {
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
     val spark = vertices.sparkSession
     import spark.implicits._
     // dedupe seeds up front: a duplicated seed row would otherwise fan the
@@ -302,7 +301,7 @@ object Centrality {
     x.select($"id", $"score")
   }
 
-  /** Driver-local PPR (n ≤ [[localThreshold]]): same recurrence as the
+  /** Driver-local PPR (n ≤ [[graft.Limits.dimensionRows]]): same recurrence as the
     * distributed loop on collected arrays — dimension-sized graphs cost more
     * in per-round stage scheduling than in arithmetic (measured ~5 s → <1 s
     * on q124's 15k-node graph). */
@@ -354,7 +353,7 @@ object Centrality {
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
   }
 
-  /** Driver-local power iteration (n ≤ [[localThreshold]]): exactly
+  /** Driver-local power iteration (n ≤ [[graft.Limits.dimensionRows]]): exactly
     * networkx's semantics — x' = x + A^T x, L2-normalized each round, stop
     * when Σ|x_t − x_{t−1}| < n·tol, None after maxIter (nx's
     * PowerIterationFailedConvergence contract). */
@@ -420,7 +419,7 @@ object Centrality {
       edges: DataFrame,
       normalized: Boolean = true,
       sampleSources: Option[Int] = None,
-      localCutoff: Long = localThreshold): DataFrame = {
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
     val n = vertices.count()
     if (n <= localCutoff) betweennessLocal(vertices, edges, normalized, sampleSources)
     else betweennessDistributed(vertices, edges, normalized,

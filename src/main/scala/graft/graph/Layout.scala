@@ -86,7 +86,7 @@ object Layout {
     * the unit-square scale (unclamped; consumers normalize for display).
     *
     * Adaptive like the other iterative graph ops: at dimension scale
-    * (≤ [[Analytics.localThreshold]] vertices) the rounds run on collected
+    * (≤ [[graft.Limits.dimensionRows]] vertices) the rounds run on collected
     * arrays — ten distributed rounds of checkpointed joins on a 30-node
     * graph are pure stage scheduling — with the identical arithmetic
     * (same formulas, same per-round HALF_UP 9-decimal rounding Spark's
@@ -96,7 +96,7 @@ object Layout {
       edges: DataFrame,
       iterations: Int = 50,
       t0: Double = 0.1,
-      localCutoff: Long = Analytics.localThreshold): DataFrame = {
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
     val n = vertices.count()
     require(n > 0, "layout of an empty graph")
     val k = math.sqrt(1.0 / n)

@@ -37,10 +37,8 @@ import org.apache.spark.sql.graft.FreshCheckpoint
   * one shuffle on the join key, and at cluster scale the visited/frontier
   * sets stay partitioned by id while AQE handles the shrinking frontier.
   * [[LocalIndex]] runs the same BFS over one collected edge list in driver
-  * memory, with no Spark job. `HttpShim` picks one path at construction by
-  * the graph operators' driver-local gate: node count ≤ `localCutoff`
-  * (default [[Analytics.localThreshold]]) serves every request from a
-  * [[LocalIndex]], a larger graph runs [[extract]] per request.
+  * memory, with no Spark job; `HttpShim` serves every request from one
+  * built at start-up.
   */
 object Subgraph {
 

@@ -48,9 +48,10 @@ object EntityQueries {
     * — reproduced by keeping empty segments in the requested set.
     */
   sealed trait LabelsResult
+  sealed trait LabelsError extends LabelsResult
   case class LabelsOk(df: DataFrame) extends LabelsResult
-  case class LabelsBadRequest(msg: String) extends LabelsResult     // → 400
-  case class LabelsServerError(msg: String) extends LabelsResult    // → 500
+  case class LabelsBadRequest(msg: String) extends LabelsError     // → 400
+  case class LabelsServerError(msg: String) extends LabelsError    // → 500
 
   val errEmpty = "List input must be non-empty."
   val errChars = "List input should not contain any characters besides numbers " +
@@ -58,18 +59,31 @@ object EntityQueries {
   val errNoValid = "No valid entity IDs provided"
 
   def labels(entities: DataFrame, idsParam: String): LabelsResult = {
+    def found(ids: Seq[String]) = entities.filter(col("id").isin(ids: _*))
+      .select(col("id"), col("name").as("label"))
+    labelsRequest(idsParam)(found(_).count())
+      .fold[LabelsResult](identity, ids => LabelsOk(found(ids.distinct)))
+  }
+
+  /** The request half of [[labels]], shared with the serving snapshot:
+    * validates `idsParam`, splits it as Python does, and applies the
+    * found-count rule to `countFound`, which gets the distinct requested ids
+    * and returns how many of them have an entity row. On success, the
+    * requested ids in request order with duplicates kept: the reference
+    * renders over the request list (`flask_app.py:139-143`). */
+  def labelsRequest(idsParam: String)(countFound: Seq[String] => Long)
+      : Either[LabelsError, Seq[String]] = {
     val stripped = Option(idsParam).map(_.trim).getOrElse("")
     if (stripped.isEmpty)
-      return LabelsBadRequest(errEmpty)
+      return Left(LabelsBadRequest(errEmpty))
     if (!stripped.matches("[\\d,]*"))
-      return LabelsBadRequest(errChars)
-    val requested = stripped.split(",", -1).toSeq.distinct
-    val found = entities.filter(col("id").isin(requested: _*))
-      .select(col("id"), col("name").as("label"))
-    val nFound = found.count()
-    if (nFound == 0) LabelsBadRequest(errNoValid)
+      return Left(LabelsBadRequest(errChars))
+    val ids = stripped.split(",", -1).toSeq
+    val requested = ids.distinct
+    val nFound = countFound(requested)
+    if (nFound == 0) Left(LabelsBadRequest(errNoValid))
     else if (nFound < requested.size)
-      LabelsServerError(s"unknown ids among: ${requested.mkString(",")}")
-    else LabelsOk(found)
+      Left(LabelsServerError(s"unknown ids among: ${requested.mkString(",")}"))
+    else Right(ids)
   }
 }

@@ -11,12 +11,13 @@ import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
-import graft.graph.{Analytics, Subgraph}
-import graft.query.{EntityQueries, SetiQueries}
+import graft.graph.Subgraph
+import graft.query.EntityQueries
 
 /** Thin HTTP facade over the engine's serving-layer queries: the three core
   * reference endpoints (`flask_app.py:95-252`) with their documented response
-  * shapes and error contracts, backed by the cached entity/edge DataFrames.
+  * shapes and error contracts, answered from a start-up snapshot of the
+  * entity/edge DataFrames.
   *
   * - `GET  /api/entities/{authors|works|all}` — IAST-collated dropdown
   *   options, precomputed at startup like the reference (`flask_app.py:60-73`)
@@ -29,16 +30,18 @@ import graft.query.{EntityQueries, SetiQueries}
   * API facade, not a data-plane component: responses are dimension-sized by
   * construction (the reference's whole graph is ~17k nodes).
   *
-  * Subgraph requests take one of two paths, chosen once at construction by
-  * the graph operators' driver-local gate: when the graph has at most
-  * `localCutoff` node ids (entities plus edge endpoints), every node and
-  * edge is annotated once at start-up and each request is a driver-local
-  * BFS plus rendering ([[LocalSubgraph]], no Spark job); a larger graph runs
-  * [[Subgraph.extract]], [[Subgraph.annotate]] and [[Subgraph.labelEdges]]
-  * per request. Both render the same bytes.
+  * Like the reference, which loads its data into memory once at start-up
+  * (`flask_app.py:18-24`), the shim is a snapshot server: every Spark job
+  * runs in the constructor, which collects the dropdowns, every node id
+  * annotated by [[Subgraph.annotate]] and every distinct edge labeled by
+  * [[Subgraph.labelEdges]]. Handlers read only that snapshot: a subgraph
+  * request is a driver-local BFS plus rendering ([[LocalSubgraph]]), and
+  * labels and visualize are map lookups. The snapshot holds every node and
+  * edge, so the driver must hold the graph.
   *
   * Each request logs one line at INFO to this class's log4j logger: method,
-  * path, status, latency and the number of Spark jobs its job group ran.
+  * path, status, latency and the number of Spark jobs its job group ran
+  * (0 for every endpoint).
   */
 class HttpShim(
     spark: SparkSession,
@@ -46,8 +49,7 @@ class HttpShim(
     edges: DataFrame,
     etextNested: Map[String, Map[String, Either[Seq[String], Map[String, Seq[String]]]]] = Map.empty,
     defaultHops: Int = 2,
-    dataDir: Option[String] = None,
-    localCutoff: Long = Analytics.localThreshold) {
+    dataDir: Option[String] = None) {
 
   import JsonOut.jstr
 
@@ -63,16 +65,17 @@ class HttpShim(
         .mkString("[", ", ", "]")
     }.toMap
 
-  /** The driver-local subgraph state when the graph has at most
-    * `localCutoff` node ids, with the known-id set for the subgraph KeyError
-    * contract (`flask_app.py:247-249`: expanding an unknown center raises
-    * KeyError in the reference → 400) and the work-entity ids
-    * (`flask_app.py:18` VALID_WORK_IDS, the by_work validation set, distinct
-    * from the set of works that HAVE links). The gate reads its node count
-    * from the annotated node rows it collects, at most `localCutoff + 1` of
-    * them, so it runs no count; above the cutoff the ids come from one
-    * `(id, type)` collect. */
-  private val (local, knownIds, workIds): (Option[LocalSubgraph], Set[String], Set[String]) = {
+  /** The subgraph snapshot, plus two maps over the entity rows among its
+    * node rows (an edge endpoint without an entity row is in neither):
+    *  - entity id → bare name, the labels lookup (`flask_app.py:142`); its
+    *    keys are the known ids of the subgraph KeyError contract
+    *    (`flask_app.py:247-249`: expanding an unknown center raises KeyError
+    *    in the reference → 400);
+    *  - work id → author ids, the visualize lookup (`flask_app.py:457-464`);
+    *    its keys are `VALID_WORK_IDS` (`flask_app.py:18`), the by_work
+    *    validation set, distinct from the set of works that HAVE links. */
+  private val (subgraphs, names, authorsOf)
+      : (LocalSubgraph, Map[String, String], Map[String, Seq[String]]) = {
     val ids = entities.select(col("id"), lit(true).as("entity"))
       .unionByName(edges.select(col("src").as("id"), lit(false).as("entity")))
       .unionByName(edges.select(col("dst").as("id"), lit(false).as("entity")))
@@ -80,18 +83,17 @@ class HttpShim(
       .groupBy("id").agg(max("entity").as("entity"))
     val nodeRows = Subgraph.annotate(ids, entities, Nil, Nil)
       .select("id", "entity", "type", "label", "aka", "social_ids", "dates",
-        "discipline", "disciplines")
-      .limit(math.min(localCutoff + 1, Int.MaxValue).toInt).collect()
-    val (local, typed) =
-      if (nodeRows.length <= localCutoff) {
-        val edgeRows = Subgraph.labelEdges(
-          edges.where(col("src").isNotNull && col("dst").isNotNull).distinct(), entities)
-          .collect()
-        (Some(new LocalSubgraph(nodeRows, edgeRows, etextNested)),
-          nodeRows.filter(_.getAs[Boolean]("entity")))
-      } else (None, entities.select("id", "type").collect())
-    (local, typed.map(_.getAs[String]("id")).toSet,
-      typed.filter(_.getAs[String]("type") == "work").map(_.getAs[String]("id")).toSet)
+        "discipline", "disciplines", "authorIds")
+      .collect()
+    val edgeRows = Subgraph.labelEdges(
+      edges.where(col("src").isNotNull && col("dst").isNotNull).distinct(), entities)
+      .collect()
+    val typed = nodeRows.filter(_.getAs[Boolean]("entity"))
+    (new LocalSubgraph(nodeRows, edgeRows, etextNested),
+      typed.map(r => r.getAs[String]("id") -> r.getAs[String]("label")).toMap,
+      typed.filter(_.getAs[String]("type") == "work").map(r =>
+        r.getAs[String]("id") ->
+          Option(r.getAs[collection.Seq[String]]("authorIds")).fold(Seq.empty[String])(_.toSeq)).toMap)
   }
 
   /** `VALID_COLLECTIONS` (`flask_app.py:24`): collections observed in the
@@ -106,9 +108,9 @@ class HttpShim(
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     // Without an executor every request serializes on the single dispatcher
-    // thread — one slow subgraph POST would block dropdowns/labels/data for
-    // all clients. Spark job submission from concurrent handler threads is
-    // safe (the scheduler is thread-safe; local[n] interleaves stages).
+    // thread — one large subgraph POST would block dropdowns/labels/data for
+    // all clients. Handlers only read the immutable start-up snapshot, so
+    // any number of them can run at once.
     server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
     server.createContext("/api/entities/", (ex: HttpExchange) => safely(ex) {
       val path = ex.getRequestURI.getPath.stripPrefix("/api/entities/")
@@ -166,24 +168,16 @@ class HttpShim(
         "Invalid entity type. Choose from 'authors', 'works', or 'all'."))
     }
 
-  private def handleLabels(ex: HttpExchange): Unit = {
-    val idsParam = queryParam(ex, "ids").orNull
-    EntityQueries.labels(entities, idsParam) match {
-      case EntityQueries.LabelsBadRequest(msg) => respond(ex, 400, errJson(msg))
-      case EntityQueries.LabelsServerError(_) =>
+  private def handleLabels(ex: HttpExchange): Unit =
+    EntityQueries.labelsRequest(queryParam(ex, "ids").orNull)(_.count(names.contains)) match {
+      case Left(EntityQueries.LabelsBadRequest(msg)) => respond(ex, 400, errJson(msg))
+      case Left(EntityQueries.LabelsServerError(_)) =>
         // flask-restx's unhandled-KeyError envelope
         respond(ex, 500, """{"message": "Internal Server Error"}""")
-      case EntityQueries.LabelsOk(df) =>
-        val byId = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
-        // the reference renders over the REQUEST list — order and duplicates
-        // preserved (`flask_app.py:139-143`)
-        val ids = idsParam.trim.split(",", -1).toSeq
-        val body = ids.map(id =>
-            s"""{"id": ${jstr(id)}, "label": ${jstr(byId(id))}}""")
-          .mkString("[", ", ", "]")
-        respond(ex, 200, body)
+      case Right(ids) =>
+        respond(ex, 200, ids.map(id => s"""{"id": ${jstr(id)}, "label": ${jstr(names(id))}}""")
+          .mkString("[", ", ", "]"))
     }
-  }
 
   private def handleSubgraph(ex: HttpExchange): Unit = {
     if (ex.getRequestMethod != "POST")
@@ -220,20 +214,10 @@ class HttpShim(
     // centers are never expanded) → except KeyError → 400 with str(e),
     // which Python renders with the id quoted (`flask_app.py:247-249`)
     (authors ++ works).filterNot(exclude.contains)
-      .find(!knownIds.contains(_))
+      .find(!names.contains(_))
       .foreach(id => return respond(ex, 400, errJson(s"Invalid ID: '$id'")))
 
-    respond(ex, 200, local match {
-      case Some(l) => l.response(authors, works, hops, exclude)
-      case None =>
-        val seeds = (authors ++ works).distinct
-        val result = Subgraph.extract(spark, edges, seeds, hops, exclude)
-        val annotated = Subgraph.annotate(result.nodes, entities, seeds, exclude)
-          .orderBy(col("id"))
-        val labeled = Subgraph.labelEdges(result.edges, entities)
-          .orderBy(col("source"), col("target"))
-        JsonOut.subgraphResponse(annotated, labeled, authors, works, hops, exclude, etextNested)
-    })
+    respond(ex, 200, subgraphs.response(authors, works, hops, exclude))
   }
 
   // --- SETI namespace (`flask_app.py:259-454`) ---
@@ -347,7 +331,7 @@ class HttpShim(
       return respond(ex, 400, errJson(EntityQueries.errChars))
     // unknown ids are silently dropped here (unlike /labels — the reference
     // guards the slice with a membership test, so no KeyError path)
-    val valid = stripped.split(",", -1).toSeq.filter(workIds.contains)
+    val valid = stripped.split(",", -1).toSeq.filter(authorsOf.contains)
     if (valid.isEmpty)
       return respond(ex, 400, errJson("No valid work IDs provided"))
     val entries = valid.distinct.filter(etextNested.contains)
@@ -389,10 +373,11 @@ class HttpShim(
   }
 
   /** `/seti/by_collection/<c>/visualize` (`flask_app.py:467-490`): the
-    * collection's works plus every author of those works
-    * ([[SetiQueries.authorsOfWorks]], J8), packaged as the template-bootstrap
-    * params — hops=0 (works+authors are already the full intended graph), no
-    * excludes, repulsion 50. `get_author_ids_for_work_ids`
+    * collection's works plus every author of those works (what
+    * [[graft.query.SetiQueries.authorsOfWorks]], J8, returns, read from the
+    * snapshot), packaged as the template-bootstrap params — hops=0
+    * (works+authors are already the full intended graph), no excludes,
+    * repulsion 50. `get_author_ids_for_work_ids`
     * (`flask_app.py:457-464`) indexes `ENTITIES_BY_ID` directly, so a work id
     * with no entity row (e.g. the '...' placeholder the `all` path keeps) is
     * an uncaught KeyError in the reference → 500. */
@@ -401,11 +386,9 @@ class HttpShim(
       case Left(err) => respond(ex, 400, errJson(err))
       case Right(entries) =>
         val works = entries.map(_._1).sorted
-        if (works.exists(!knownIds.contains(_)))
+        if (works.exists(!names.contains(_)))
           return respond(ex, 500, """{"message": "Internal Server Error"}""")
-        import spark.implicits._
-        val authors = SetiQueries.authorsOfWorks(entities, works.toDF("id"))
-          .collect().map(_.getString(0)).sorted.toSeq
+        val authors = works.flatMap(authorsOf.getOrElse(_, Nil)).distinct.sorted
         def arr(xs: Seq[String]) = xs.map(jstr).mkString("[", ", ", "]")
         respond(ex, 200,
           s"""{"initial_params": {"works": ${arr(works)}, "authors": ${arr(authors)}, """ +

@@ -6,10 +6,11 @@ import org.apache.spark.sql.Row
 
 import graft.graph.Subgraph
 
-/** Driver-local serving of `POST /api/graph/subgraph` for a graph at or below
-  * the shim's `localCutoff`: what the distributed path computes per request
-  * that does not depend on the request is computed once, here, from the rows
-  * `HttpShim` collects at start-up.
+/** Driver-local serving of `POST /api/graph/subgraph`: what the library
+  * composition ([[Subgraph.extract]], [[Subgraph.annotate]],
+  * [[Subgraph.labelEdges]], [[JsonOut.subgraphResponse]]) computes per
+  * request that does not depend on the request is computed once, here, from
+  * the rows `HttpShim` collects at start-up.
   *
   * @param nodeRows every node id annotated by [[Subgraph.annotate]] (its
   *                 `is_central`/`is_excluded` are set per request)
@@ -18,7 +19,7 @@ import graft.graph.Subgraph
   * A request runs the BFS on a [[Subgraph.LocalIndex]] over `edgeRows`,
   * sets the two flags by set membership, orders nodes by id and edges by
   * (source, target) in Spark's string order (unsigned UTF-8 bytes, as the
-  * distributed path's `orderBy` sorts), and renders through the same
+  * composition's `orderBy` sorts), and renders through the same
   * [[JsonOut]] pieces as the DataFrame overload — no Spark job.
   */
 private[serve] final class LocalSubgraph(
@@ -56,7 +57,7 @@ private[serve] final class LocalSubgraph(
   }
 
   /** The response body `JsonOut.subgraphResponse` renders for the same
-    * request on the distributed path. */
+    * request from the library composition. */
   def response(authors: Seq[String], works: Seq[String], hops: Int,
       exclude: Seq[String]): String = {
     val seeds = (authors ++ works).distinct

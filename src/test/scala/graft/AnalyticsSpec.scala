@@ -17,9 +17,10 @@ import graft.graph.{Analytics, Centrality, Community, Subgraph}
   * (modularity, eigenvector convergence) read the reference export through
   * [[Fixtures.reference]], so a missing checkout cancels them. The
   * local-vs-distributed agreement tests (connected components, sampled
-  * betweenness, personalized PageRank) assert what every graph satisfies:
-  * they run on the synthetic export's h3 around [[SyntheticExport.hub]], and
-  * on the reference h3 around 40377 where the checkout is present.
+  * betweenness, PageRank, personalized PageRank) assert what every graph
+  * satisfies: they run on the synthetic export's h3 around
+  * [[SyntheticExport.hub]], and on the reference h3 around 40377 where the
+  * checkout is present.
   */
 class AnalyticsSpec extends SparkTestBase {
 
@@ -291,6 +292,25 @@ class AnalyticsSpec extends SparkTestBase {
       local.foreach { case (id, v) =>
         assert(math.abs(dupLocal(id) - v) < 1e-12, s"dup seeds changed local at $id")
         assert(math.abs(dupDist(id) - v) < 1e-12, s"dup seeds changed dist at $id")
+      }
+    }
+  }
+
+  test("pagerank: distributed path agrees with local on an edge leaving the graph") {
+    eachH3 { h3 =>
+      import spark.implicits._
+      // an edge from a vertex to an id outside the vertex set counts in its
+      // source's outdeg on both paths; the mass it carries leaves the graph
+      val src = h3._1.select(col("id")).as[String].collect().min
+      val edges = h3._2.select("src", "dst")
+        .unionByName(Seq((src, "outside-the-graph")).toDF("src", "dst"))
+      val local = Centrality.pageRank(h3._1, edges)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      val dist = Centrality.pageRank(h3._1, edges, localCutoff = 0)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(dist.keySet === local.keySet)
+      local.foreach { case (id, v) =>
+        assert(math.abs(dist(id) - v) < 1e-12, s"score mismatch at $id: ${dist(id)} vs $v")
       }
     }
   }

@@ -18,9 +18,7 @@ import graft.etl.EntityBuilder
   *    [[assumeFile]], so a missing checkout cancels them.
   *  - Tests that assert what every graph must satisfy run on the synthetic
   *    export through [[onEach]], and on the reference export as well where
-  *    its checkout is present.
-  *  - `HttpShimSpec` reads [[built]] unguarded: a missing checkout fails its
-  *    reference tests, as its own docstring states. */
+  *    its checkout is present. */
 object Fixtures {
 
   val referenceDir = "/root/reference"
