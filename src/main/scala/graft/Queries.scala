@@ -3007,13 +3007,11 @@ object Queries {
         // dims), per-doc sparse counts — fixed-width featurization with no
         // vocabulary build, the standard first step when the token space is
         // unbounded. Pure projection + one (doc, idx) agg.
-        def h60(c: Column): Column =
-          conv(substring(md5(c), 1, 15), 16, 10).cast("long")
         T(s, d, "documents")
           .select(col("doc_id"),
             explode(filter(split(lower(col("text")), "\\s+"), x => x =!= ""))
               .as("tok"))
-          .select(col("doc_id"), (h60(col("tok")) % 1024).as("feature_idx"))
+          .select(col("doc_id"), (graft.expr.Hash60.h60Col(col("tok")) % 1024).as("feature_idx"))
           .groupBy(col("doc_id"), col("feature_idx"))
           .agg(count(lit(1)).as("n"))
       },
@@ -3224,13 +3222,11 @@ object Queries {
         // primitive for verifying a 100 TB copy: one scan, one tiny partial
         // agg, no sort. (Float columns excluded: their string rendering is
         // engine-specific; ints/strings are canonical.)
-        def h60(c: Column): Column =
-          conv(substring(md5(c), 1, 15), 16, 10).cast("long")
         val rowRepr = concat_ws("|", col("l_orderkey").cast("string"),
           col("l_linenumber").cast("string"), col("l_returnflag"),
           col("l_linestatus"))
         T(s, d, "lineitem")
-          .select(col("l_returnflag"), (h60(rowRepr) % 1099511627776L).as("h40"))
+          .select(col("l_returnflag"), (graft.expr.Hash60.h60Col(rowRepr) % 1099511627776L).as("h40"))
           .groupBy(col("l_returnflag"))
           .agg(expr("bit_xor(h40)").as("checksum"), count(lit(1)).as("n_rows"))
       },
@@ -3307,8 +3303,6 @@ object Queries {
         // integer construction the oracle replays EXACTLY. Queried for keys
         // with true count ≥ 40 alongside exact counts (est ≥ exact always;
         // overestimate bounded by collisions).
-        def h60(c: Column): Column =
-          conv(substring(md5(c), 1, 15), 16, 10).cast("long")
         // hash per DISTINCT key, not per event row: the (key, j) bucket is
         // key-functional, so the sketch builds from the per-key count table —
         // |keys|×4 md5 evaluations instead of |rows|×4 (30× fewer here), and
@@ -3318,7 +3312,7 @@ object Queries {
         val keyBuckets = perKey.select(col("l_partkey"), col("n"),
             explode(expr("sequence(0, 3)")).as("j"))
           .select(col("l_partkey"), col("n"), col("j"),
-            (h60(concat(col("l_partkey").cast("string"), lit(":"), col("j"))) % 256)
+            (graft.expr.Hash60.h60Col(concat(col("l_partkey").cast("string"), lit(":"), col("j"))) % 256)
               .as("bucket"))
         val cells = keyBuckets.groupBy(col("j"), col("bucket"))
           .agg(sum(col("n")).as("cnt"))

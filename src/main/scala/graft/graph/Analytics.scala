@@ -28,21 +28,16 @@ object Analytics {
     * that would cost min-label propagation O(n) shuffle rounds finishes in
     * ~log n. Component id = min entity id (natural column order) reachable.
     *
-    * At or below `localCutoff` vertices (default
-    * [[graft.Limits.dimensionRows]]), components are solved on collected
-    * driver arrays (union-find, exact, no per-round scheduling): any
-    * iterative distributed scheme costs per-round stage scheduling, which
-    * for dimension-sized graphs is pure overhead. LS/SS remains the scale
+    * A graph within `localCutoff` is solved by union-find on its
+    * [[LocalGraph]] (exact, no per-round scheduling); LS/SS is the scale
     * path.
     *
     * @return (id, component) — component = min id in the component.
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
-      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
-    val n = vertices.count()
-    if (n <= localCutoff && n > 0) return ccLocal(vertices, edges)
-    ccLargeSmallStar(vertices, edges)._1
-  }
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame =
+    LocalGraph(vertices, edges, localCutoff).map(ccLocal)
+      .getOrElse(ccLargeSmallStar(vertices, edges)._1)
 
   /** Distributed large-star/small-star to fixpoint. Every step is an
     * equi-join/groupBy on the node key — shuffle-on-key, no driver state;
@@ -100,15 +95,12 @@ object Analytics {
     (labels, rounds)
   }
 
-  /** Driver-local union-find (n ≤ [[graft.Limits.dimensionRows]]). Component label =
-    * min member id under the id column's natural ordering — identical to the
-    * distributed loop's `min()` semantics for string/long/int ids. */
-  private def ccLocal(vertices: DataFrame, edges: DataFrame): DataFrame = {
-    val spark = vertices.sparkSession
-    val idType = vertices.schema("id").dataType
-    val ids: Array[Any] = vertices.select(col("id")).collect().map(_.get(0))
-    val idx = ids.zipWithIndex.toMap
-    val parent = Array.tabulate(ids.length)(identity)
+  /** Driver-local union-find. Component label = min member id under the id
+    * column's natural ordering — identical to the distributed loop's
+    * `min()` semantics for string/long/int ids. */
+  private def ccLocal(g: LocalGraph): DataFrame = {
+    val ids = g.ids
+    val parent = Array.tabulate(g.n)(identity)
     def find(x: Int): Int = {
       var r = x
       while (parent(r) != r) r = parent(r)
@@ -116,13 +108,9 @@ object Analytics {
       while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
-    edges.select(col("src"), col("dst")).collect().foreach { r =>
-      (idx.get(r.get(0)), idx.get(r.get(1))) match {
-        case (Some(a), Some(b)) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent(ra) = rb
-        case _ =>
-      }
+    g.internal.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(ra) = rb
     }
     val minOf = scala.collection.mutable.HashMap.empty[Int, Any]
     def lt(a: Any, b: Any): Boolean =
@@ -134,12 +122,7 @@ object Analytics {
         case None => minOf(r) = ids(i)
       }
     }
-    val rows = ids.indices.map(i => org.apache.spark.sql.Row(ids(i), minOf(find(i))))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", idType),
-      org.apache.spark.sql.types.StructField("component", idType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows,
-      math.max(1, math.min(8, ids.length / 4096))), schema)
+    g.frame(("component", g.idType, i => minOf(find(i))))
   }
 
   /** Component size histogram + category summary (`utils/analyze.py:15-72`).
@@ -570,8 +553,6 @@ object Analytics {
       .withColumn("idx",
         (row_number().over(byA.orderBy(col("b"))) - 1).cast("long"))
       .withColumn("deg", count(lit(1)).over(byA).cast("long")))
-    def h60(c: Column): Column =
-      conv(substring(md5(c), 1, 15), 16, 10).cast("long")
     // One row per vertex: joining walkers here first keeps the step cost
     // O(1) rows per walker. Joining the full adjacency and filtering after
     // would materialize deg(v) rows per walker per step — on a degree-10^6
@@ -585,7 +566,8 @@ object Analytics {
     for (s <- 1 to steps) {
       val target = walk.join(degs, col("cur") === col("node"))
         .select(col("walker"), col("cur"),
-          (h60(concat(col("walker").cast("string"), lit(s":$s"))) % col("deg"))
+          (graft.expr.Hash60.h60Col(concat(col("walker").cast("string"), lit(s":$s")))
+            % col("deg"))
             .as("tgt"))
       walk = target.join(adj,
           target("cur") === adj("a") && target("tgt") === adj("idx"))

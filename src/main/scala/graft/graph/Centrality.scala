@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FreshCheckpoint
+import org.apache.spark.sql.types.DoubleType
 
 import scala.collection.mutable
 
@@ -12,12 +13,14 @@ import scala.collection.mutable
   * - eigenvector: distributed power iteration — one shuffle per round,
   *   L2-normalized, None-on-non-convergence contract like the reference
   *   (`utils/analyze.py:169-174`).
-  * - betweenness: adaptive Brandes. At dimension scale
-  *   (≤ `Limits.dimensionRows`, like the reference's 17k nodes) the
-  *   adjacency is broadcast once and each partition of sources runs
-  *   independent exact single-source passes, partial scores summed by key. Above the threshold nothing touches the
+  * - betweenness: adaptive Brandes. On a [[LocalGraph]] (dimension scale,
+  *   like the reference's 17k nodes) the adjacency is broadcast once and
+  *   each partition of sources runs independent exact single-source passes,
+  *   partial scores summed by key. Above the cutoff nothing touches the
   *   driver: k-sampled Brandes runs as level-synchronous DataFrame joins
   *   (forward BFS for sigma, backward accumulation for delta).
+  * - pageRank and personalizedPageRank: one kernel, uniform or seeded
+  *   teleport.
   */
 object Centrality {
 
@@ -41,25 +44,28 @@ object Centrality {
     * convention), L2-normalized each round.
     * Returns None if |x_t - x_{t-1}|_1 > n*tol after maxIter rounds
     * (the reference catches PowerIterationFailedConvergence → None).
-    *
-    * At or below `localCutoff` vertices (default
-    * [[graft.Limits.dimensionRows]]) the iteration runs on collected driver
-    * arrays (exact nx L1 semantics, no per-round stage scheduling); above it,
-    * the distributed join loop. Dimension-sized graphs — like the
-    * reference's 17k nodes — cost ~10 Spark stages *per power-iteration
-    * round* in the distributed formulation, all scheduling overhead.
+    * A graph within `localCutoff` iterates on a [[LocalGraph]] with nx's
+    * exact L1 rule; a larger one runs the distributed join loop below.
     */
   def eigenvector(
       vertices: DataFrame,
       edges: DataFrame,
       maxIter: Int = 100,
       tol: Double = 1e-6,
-      localCutoff: Long = graft.Limits.dimensionRows): Option[DataFrame] = {
+      localCutoff: Long = graft.Limits.dimensionRows): Option[DataFrame] =
+    LocalGraph(vertices, edges, localCutoff) match {
+      case Some(g) => eigenvectorLocal(g, maxIter, tol)
+      case None => eigenvectorDistributed(vertices, edges, maxIter, tol)
+    }
+
+  private def eigenvectorDistributed(
+      vertices: DataFrame,
+      edges: DataFrame,
+      maxIter: Int,
+      tol: Double): Option[DataFrame] = {
     val spark = vertices.sparkSession
     import spark.implicits._
     val n = vertices.count()
-    if (n <= localCutoff && n > 0)
-      return eigenvectorLocal(vertices, edges, maxIter, tol)
     val e = FreshCheckpoint(edges.select($"src", $"dst"))
     // x' = x + A^T x (networkx adds the self term via A+I implicitly through
     // its hub-start; follow nx.eigenvector_centrality: x' = x*0 + A^T x + x).
@@ -77,14 +83,10 @@ object Centrality {
     val checkEvery = 3
     var x = FreshCheckpoint(
       vertices.select($"id", lit(1.0 / math.sqrt(n.toDouble)).as("score")))
-    var prev = x
     var it = 0
     var converged = false
     while (it < maxIter && !converged) {
-      val contrib = e.join(x.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy($"dst".as("id")).agg(sum($"score").as("inc"))
-      val next = x.join(contrib, Seq("id"), "left")
-        .select($"id", ($"score" + coalesce($"inc", lit(0.0))).as("score"))
+      val next = plusAtx(e, x)
       it += 1
       if (it % checkEvery == 0 || it == maxIter) {
         val joined = next.join(
@@ -96,12 +98,8 @@ object Centrality {
         val deltaL2Sq =
           if (denom == 0) 2.0 else math.max(0.0, 2.0 - 2.0 * c / denom)
         converged = deltaL2Sq <= n * tol * tol
-        prev = x
         x = FreshCheckpoint(next)
-      } else {
-        prev = x
-        x = next
-      }
+      } else x = next
     }
     if (!converged) None
     else {
@@ -110,272 +108,183 @@ object Centrality {
     }
   }
 
+  /** One distributed step of x' = x + Aᵀx over (id, score) rows. */
+  private def plusAtx(e: DataFrame, x: DataFrame): DataFrame = {
+    val contrib = e.join(x.withColumnRenamed("id", "src"), Seq("src"))
+      .groupBy(col("dst").as("id")).agg(sum(col("score")).as("inc"))
+    x.join(contrib, Seq("id"), "left")
+      .select(col("id"), (col("score") + coalesce(col("inc"), lit(0.0))).as("score"))
+  }
+
   /** Fixed-round power iteration: x' = x + Aᵀx for exactly `iters` rounds,
     * L2-normalized ONCE at the end. The recurrence is linear, so per-round
     * normalization only rescales — skipping it changes nothing but makes the
     * round count (and hence the result) fully deterministic, which is what
     * lets a SQL oracle replay the identical computation (the convergence-
     * gated [[eigenvector]] stops at a data-dependent round, and its
-    * still-converging iterate can't be reproduced portably). Same adaptive
-    * local/distributed split as [[eigenvector]]: dimension-sized graphs run
-    * on collected arrays (no per-round stage scheduling), larger ones via
-    * the join loop with checkpoint cadence. */
+    * still-converging iterate can't be reproduced portably). Runs on a
+    * [[LocalGraph]] within `localCutoff`, else as the join loop with
+    * checkpoint cadence. */
   def powerIterationFixed(
       vertices: DataFrame,
       edges: DataFrame,
       iters: Int,
-      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
-    val n = vertices.count()
-    if (n <= localCutoff && n > 0) {
-      val ids = vertices.select(col("id")).collect().map(_.get(0)).toIndexedSeq
-      val idx = ids.zipWithIndex.toMap
-      val es = edges.select(col("src"), col("dst")).collect()
-        .flatMap { r =>
-          (idx.get(r.get(0)), idx.get(r.get(1))) match {
-            case (Some(s), Some(d)) => Some((s, d))
-            case _ => None
-          }
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame =
+    LocalGraph(vertices, edges, localCutoff) match {
+      case Some(g) =>
+        val es = g.internal
+        var x = Array.fill(g.n)(1.0)
+        var it = 0
+        while (it < iters) {
+          val next = x.clone()
+          es.foreach { case (s, d) => next(d) += x(s) }
+          x = next
+          it += 1
         }
-      var x = Array.fill(ids.length)(1.0)
-      var it = 0
-      while (it < iters) {
-        val next = x.clone()
-        es.foreach { case (s, d) => next(d) += x(s) }
-        x = next
-        it += 1
-      }
-      val norm = math.sqrt(x.map(v => v * v).sum)
-      val scale = if (norm == 0) 1.0 else norm
-      val rows = ids.indices.map(i => org.apache.spark.sql.Row(ids(i), x(i) / scale))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", vertices.schema("id").dataType),
-        org.apache.spark.sql.types.StructField("score",
-          org.apache.spark.sql.types.DoubleType)))
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    } else {
-      val e = FreshCheckpoint(edges.select($"src", $"dst"))
-      var x = FreshCheckpoint(vertices.select($"id", lit(1.0).as("score")))
-      var it = 0
-      while (it < iters) {
-        val contrib = e.join(x.withColumnRenamed("id", "src"), Seq("src"))
-          .groupBy($"dst".as("id")).agg(sum($"score").as("inc"))
-        val next = x.join(contrib, Seq("id"), "left")
-          .select($"id", ($"score" + coalesce($"inc", lit(0.0))).as("score"))
-        it += 1
-        x = if (it % 3 == 0 || it == iters) FreshCheckpoint(next) else next
-      }
-      val norm = math.sqrt(x.agg(sum($"score" * $"score")).as[Double].head())
-      x.select($"id", ($"score" / (if (norm == 0) 1.0 else norm)).as("score"))
+        val norm = math.sqrt(x.map(v => v * v).sum)
+        val scale = if (norm == 0) 1.0 else norm
+        g.frame(("score", DoubleType, i => x(i) / scale))
+      case None =>
+        val e = FreshCheckpoint(edges.select(col("src"), col("dst")))
+        var x = FreshCheckpoint(vertices.select(col("id"), lit(1.0).as("score")))
+        var it = 0
+        while (it < iters) {
+          val next = plusAtx(e, x)
+          it += 1
+          x = if (it % 3 == 0 || it == iters) FreshCheckpoint(next) else next
+        }
+        val norm = math.sqrt(x.agg(sum(col("score") * col("score"))).head().getDouble(0))
+        x.select(col("id"), (col("score") / (if (norm == 0) 1.0 else norm)).as("score"))
     }
-  }
 
   /** PageRank, fixed `iters` rounds with dangling-mass redistribution:
     * pr'(v) = (1-d)/n + d·(Σ_{u→v} pr(u)/outdeg(u) + dangling/n).
     * Deterministic round count → SQL-oracle-replayable (same rationale as
-    * [[powerIterationFixed]]). Adaptive local/distributed split; the
-    * distributed loop costs one contrib-join shuffle plus one scalar
-    * dangling aggregation per round, checkpointed every 3 rounds. At
-    * cluster scale pre-partition edges by src so the per-round join
-    * reuses the exchange. */
+    * [[powerIterationFixed]]). It is [[personalizedPageRank]] with every
+    * vertex a seed: the same kernel, teleporting 1/n to each vertex. */
   def pageRank(
       vertices: DataFrame,
       edges: DataFrame,
       iters: Int = 20,
       damping: Double = 0.85,
-      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
-    val n = vertices.count()
-    val base = (1.0 - damping) / n
-    if (n <= localCutoff && n > 0) {
-      val ids = vertices.select(col("id")).collect().map(_.get(0)).toIndexedSeq
-      val idx = ids.zipWithIndex.toMap
-      // outdeg counts every edge whose src is a vertex, its dst one or not,
-      // as the distributed loop does (see pprLocal)
-      val raw = edges.select(col("src"), col("dst")).collect()
-        .flatMap(r => idx.get(r.get(0)).map(s => (s, idx.get(r.get(1)))))
-      val outdeg = new Array[Long](ids.length)
-      raw.foreach { case (s, _) => outdeg(s) += 1 }
-      val es = raw.collect { case (s, Some(d)) => (s, d) }
-      var x = Array.fill(ids.length)(1.0 / n)
-      var it = 0
-      while (it < iters) {
-        val inc = new Array[Double](ids.length)
-        es.foreach { case (s, d) => inc(d) += x(s) / outdeg(s) }
-        var dangling = 0.0
-        var i = 0
-        while (i < ids.length) { if (outdeg(i) == 0) dangling += x(i); i += 1 }
-        val next = new Array[Double](ids.length)
-        i = 0
-        while (i < ids.length) {
-          next(i) = base + damping * (inc(i) + dangling / n); i += 1
-        }
-        x = next
-        it += 1
-      }
-      val rows = ids.indices.map(i => org.apache.spark.sql.Row(ids(i), x(i)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", vertices.schema("id").dataType),
-        org.apache.spark.sql.types.StructField("score",
-          org.apache.spark.sql.types.DoubleType)))
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-    } else {
-      val e = FreshCheckpoint(edges.select($"src", $"dst"))
-      val od = e.groupBy($"src".as("id")).agg(count(lit(1)).as("outdeg"))
-      val v = FreshCheckpoint(vertices.select($"id")
-        .join(od, Seq("id"), "left").na.fill(0L, Seq("outdeg")))
-      var x = FreshCheckpoint(v.select($"id", $"outdeg", lit(1.0 / n).as("score")))
-      var it = 0
-      while (it < iters) {
-        val dangling =
-          x.filter($"outdeg" === 0).agg(sum($"score")).as[Option[Double]].head().getOrElse(0.0)
-        val contrib = e.join(
-            x.filter($"outdeg" > 0) // dangling rows: no out-edges, and ANSI mode rejects the 0-divisor
-              .select($"id".as("src"), ($"score" / $"outdeg").as("c")), Seq("src"))
-          .groupBy($"dst".as("id")).agg(sum($"c").as("inc"))
-        val next = x.select($"id", $"outdeg").join(contrib, Seq("id"), "left")
-          .select($"id", $"outdeg",
-            (lit(base) + lit(damping) *
-              (coalesce($"inc", lit(0.0)) + lit(dangling / n))).as("score"))
-        it += 1
-        x = if (it % 3 == 0 || it == iters) FreshCheckpoint(next) else next
-      }
-      x.select($"id", $"score")
-    }
-  }
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame =
+    teleportWalk(vertices, edges, None, iters, damping, localCutoff)
 
   /** Personalized PageRank, fixed `iters` rounds: teleport (and dangling
     * mass) return to the SEED distribution instead of uniformly —
     * ppr'(v) = (1−d)·e(v) + d·(Σ_{u→v} ppr(u)/outdeg(u) + dangling·e(v)),
     * e = uniform over `seeds`. The recommender/locality variant of
-    * [[pageRank]] (scores concentrate around the seed neighborhood). Seeds
-    * broadcast onto the vertex frame once; per round, one contrib-join
-    * shuffle plus the dangling mass folded into the SAME plan as a
-    * broadcast single-row aggregate — no per-round driver action, so the
-    * only jobs are the every-3-rounds checkpoints (a driver-side dangling
-    * collect re-ran up to 3 rounds of lineage per iteration; measured ~2×
-    * on the 8-round q124). Deterministic round count → the oracle replays
-    * every round. */
+    * [[pageRank]] (scores concentrate around the seed neighborhood).
+    * Deterministic round count → the oracle replays every round. */
   def personalizedPageRank(
       vertices: DataFrame,
       edges: DataFrame,
       seeds: DataFrame,
       iters: Int = 8,
       damping: Double = 0.85,
-      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame =
     // dedupe seeds up front: a duplicated seed row would otherwise fan the
     // vertex row out through the broadcast join and double-count its mass
     // (and the local path would disagree with the distributed one)
-    val seedIds = seeds.select($"id").distinct()
-    val nS = seedIds.count().toDouble
-    val n = vertices.count()
-    if (n <= localCutoff && n > 0)
-      return pprLocal(vertices, edges, seedIds, iters, damping, nS)
-    val e = FreshCheckpoint(edges.select($"src", $"dst"))
-    val od = e.groupBy($"src".as("id")).agg(count(lit(1)).as("outdeg"))
-    val v = FreshCheckpoint(vertices.select($"id")
-      .join(od, Seq("id"), "left").na.fill(0L, Seq("outdeg"))
-      .join(broadcast(seedIds.select($"id", lit(1.0 / nS).as("w"))), Seq("id"), "left")
-      .na.fill(0.0, Seq("w")))
-    var x = v.select($"id", $"outdeg", $"w", $"w".as("score"))
-    var it = 0
-    while (it < iters) {
-      val dangling = x.filter($"outdeg" === 0)
-        .agg(coalesce(sum($"score"), lit(0.0)).as("dang"))
-      val contrib = e.join(
-          x.filter($"outdeg" > 0) // dangling rows: no out-edges, and ANSI mode rejects the 0-divisor
-            .select($"id".as("src"), ($"score" / $"outdeg").as("c")), Seq("src"))
-        .groupBy($"dst".as("id")).agg(sum($"c").as("inc"))
-      val next = x.select($"id", $"outdeg", $"w").join(contrib, Seq("id"), "left")
-        .crossJoin(broadcast(dangling)) // single-row scalar, stays in-plan
-        .select($"id", $"outdeg", $"w",
-          (lit(1.0 - damping) * $"w" + lit(damping) *
-            (coalesce($"inc", lit(0.0)) + $"dang" * $"w")).as("score"))
-      it += 1
-      x = if (it % 3 == 0 || it == iters) FreshCheckpoint(next) else next
-    }
-    x.select($"id", $"score")
-  }
+    teleportWalk(vertices, edges, Some(seeds.select(col("id")).distinct()),
+      iters, damping, localCutoff)
 
-  /** Driver-local PPR (n ≤ [[graft.Limits.dimensionRows]]): same recurrence as the
-    * distributed loop on collected arrays — dimension-sized graphs cost more
-    * in per-round stage scheduling than in arithmetic (measured ~5 s → <1 s
-    * on q124's 15k-node graph). */
-  private def pprLocal(
+  /** The PageRank kernel with teleport weights w, starting from x = w:
+    * x'(v) = (1−d)·w(v) + d·(Σ_{u→v} x(u)/outdeg(u) + dangling·w(v)).
+    * `seeds` None puts 1/n on every vertex; Some puts 1/|seeds| on each
+    * (distinct) seed. outdeg counts every edge whose src is a vertex, its
+    * dst one or not; mass sent to a dst outside the vertex set leaves the
+    * graph, on both paths. A graph within `localCutoff` iterates on a
+    * [[LocalGraph]] (measured ~5 s → <1 s on q124's 15k-node graph). The
+    * distributed loop broadcasts the weights onto the vertex frame once;
+    * per round it runs one contrib-join shuffle, with the dangling mass
+    * folded into the SAME plan as a broadcast single-row aggregate — no
+    * per-round driver action, so the only jobs are the every-3-rounds
+    * checkpoints (a driver-side dangling collect re-ran up to 3 rounds of
+    * lineage per iteration; measured ~2× on the 8-round q124). */
+  private def teleportWalk(
       vertices: DataFrame,
       edges: DataFrame,
-      seeds: DataFrame,
+      seeds: Option[DataFrame],
       iters: Int,
       damping: Double,
-      nS: Double): DataFrame = {
-    val spark = vertices.sparkSession
-    val ids = vertices.select(col("id")).collect().map(_.get(0)).toIndexedSeq
-    val idx = ids.zipWithIndex.toMap
-    // mirror the distributed loop exactly: outdeg counts EVERY edge whose
-    // src is a known vertex (the distributed outdeg aggregates the raw edge
-    // table), while propagation to an unknown dst vanishes (the left join
-    // back onto the vertex frame drops it — leaked mass, same both paths)
-    val raw = edges.select(col("src"), col("dst")).collect()
-      .flatMap(r => idx.get(r.get(0)).map(s => (s, idx.get(r.get(1)))))
-    val outdeg = new Array[Long](ids.length)
-    raw.foreach { case (s, _) => outdeg(s) += 1 }
-    val es = raw.collect { case (s, Some(d)) => (s, d) }
-    val seedIdx = seeds.select(col("id")).collect()
-      .flatMap(r => idx.get(r.get(0)))
-    val w = new Array[Double](ids.length)
-    seedIdx.foreach(i => w(i) = 1.0 / nS)
-    var x = w.clone()
-    var it = 0
-    while (it < iters) {
-      var dangling = 0.0
-      var i = 0
-      while (i < ids.length) { if (outdeg(i) == 0) dangling += x(i); i += 1 }
-      val inc = new Array[Double](ids.length)
-      es.foreach { case (s, d) => inc(d) += x(s) / outdeg(s) }
-      val next = new Array[Double](ids.length)
-      i = 0
-      while (i < ids.length) {
-        next(i) = (1.0 - damping) * w(i) + damping * (inc(i) + dangling * w(i))
-        i += 1
-      }
-      x = next
-      it += 1
+      localCutoff: Long): DataFrame =
+    LocalGraph(vertices, edges, localCutoff) match {
+      case Some(g) =>
+        val w = new Array[Double](g.n)
+        seeds match {
+          case None => java.util.Arrays.fill(w, 1.0 / g.n)
+          case Some(s) =>
+            val seedIds = s.collect().map(_.get(0))
+            seedIds.flatMap(g.index.get).foreach(i => w(i) = 1.0 / seedIds.length)
+        }
+        val outdeg = new Array[Long](g.n)
+        g.src.foreach(s => outdeg(s) += 1)
+        val es = g.internal
+        var x = w.clone()
+        var it = 0
+        while (it < iters) {
+          var dangling = 0.0
+          var i = 0
+          while (i < g.n) { if (outdeg(i) == 0) dangling += x(i); i += 1 }
+          val inc = new Array[Double](g.n)
+          es.foreach { case (s, d) => inc(d) += x(s) / outdeg(s) }
+          val next = new Array[Double](g.n)
+          i = 0
+          while (i < g.n) {
+            next(i) = (1.0 - damping) * w(i) + damping * (inc(i) + dangling * w(i))
+            i += 1
+          }
+          x = next
+          it += 1
+        }
+        g.frame(("score", DoubleType, i => x(i)))
+      case None =>
+        val spark = vertices.sparkSession
+        import spark.implicits._
+        val e = FreshCheckpoint(edges.select($"src", $"dst"))
+        val od = e.groupBy($"src".as("id")).agg(count(lit(1)).as("outdeg"))
+        val v0 = vertices.select($"id")
+          .join(od, Seq("id"), "left").na.fill(0L, Seq("outdeg"))
+        val v = FreshCheckpoint(seeds match {
+          case None => v0.withColumn("w", lit(1.0 / vertices.count()))
+          case Some(s) =>
+            v0.join(broadcast(s.select($"id", lit(1.0 / s.count()).as("w"))),
+              Seq("id"), "left").na.fill(0.0, Seq("w"))
+        })
+        var x = v.select($"id", $"outdeg", $"w", $"w".as("score"))
+        var it = 0
+        while (it < iters) {
+          val dangling = x.filter($"outdeg" === 0)
+            .agg(coalesce(sum($"score"), lit(0.0)).as("dang"))
+          val contrib = e.join(
+              x.filter($"outdeg" > 0) // dangling rows: no out-edges, and ANSI mode rejects the 0-divisor
+                .select($"id".as("src"), ($"score" / $"outdeg").as("c")), Seq("src"))
+            .groupBy($"dst".as("id")).agg(sum($"c").as("inc"))
+          val next = x.select($"id", $"outdeg", $"w").join(contrib, Seq("id"), "left")
+            .crossJoin(broadcast(dangling)) // single-row scalar, stays in-plan
+            .select($"id", $"outdeg", $"w",
+              (lit(1.0 - damping) * $"w" + lit(damping) *
+                (coalesce($"inc", lit(0.0)) + $"dang" * $"w")).as("score"))
+          it += 1
+          x = if (it % 3 == 0 || it == iters) FreshCheckpoint(next) else next
+        }
+        x.select($"id", $"score")
     }
-    val rows = ids.indices.map(i => org.apache.spark.sql.Row(ids(i), x(i)))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", vertices.schema("id").dataType),
-      org.apache.spark.sql.types.StructField("score",
-        org.apache.spark.sql.types.DoubleType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-  }
 
-  /** Driver-local power iteration (n ≤ [[graft.Limits.dimensionRows]]): exactly
-    * networkx's semantics — x' = x + A^T x, L2-normalized each round, stop
-    * when Σ|x_t − x_{t−1}| < n·tol, None after maxIter (nx's
+  /** Driver-local power iteration: exactly networkx's semantics —
+    * x' = x + A^T x, L2-normalized each round, stop when
+    * Σ|x_t − x_{t−1}| < n·tol, None after maxIter (nx's
     * PowerIterationFailedConvergence contract). */
   private def eigenvectorLocal(
-      vertices: DataFrame,
-      edges: DataFrame,
+      g: LocalGraph,
       maxIter: Int,
       tol: Double): Option[DataFrame] = {
-    val spark = vertices.sparkSession
-    val ids = vertices.select(col("id")).collect().map(_.get(0)).toIndexedSeq
-    val idx = ids.zipWithIndex.toMap
-    val n = ids.length
-    val es = edges.select(col("src"), col("dst")).collect()
-      .flatMap { r =>
-        (idx.get(r.get(0)), idx.get(r.get(1))) match {
-          case (Some(s), Some(d)) => Some((s, d))
-          case _ => None
-        }
-      }
+    val n = g.n
+    val es = g.internal
     var x = Array.fill(n)(1.0 / math.sqrt(n.toDouble))
     var it = 0
-    var converged = false
+    var converged = n == 0 // the empty vector is its own fixpoint
     while (it < maxIter && !converged) {
       val next = x.clone()
       es.foreach { case (s, d) => next(d) += x(s) }
@@ -388,22 +297,13 @@ object Centrality {
       it += 1
     }
     if (!converged) None
-    else {
-      val rows = ids.indices.map(i => org.apache.spark.sql.Row(ids(i), x(i)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          vertices.schema("id").dataType),
-        org.apache.spark.sql.types.StructField("score",
-          org.apache.spark.sql.types.DoubleType)))
-      Some(spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema))
-    }
+    else Some(g.frame(("score", DoubleType, i => x(i))))
   }
 
-  /** Betweenness centrality (Brandes 2001), adaptive like the other
-    * centralities: at or below `localCutoff` vertices the adjacency is
-    * broadcast and exact single-source passes run embarrassingly parallel
-    * over sources ([[betweennessLocal]]); above it NOTHING is collected to
+  /** Betweenness centrality (Brandes 2001). A graph within `localCutoff`
+    * runs exact single-source passes from its [[LocalGraph]], embarrassingly
+    * parallel over sources with the adjacency broadcast
+    * ([[betweennessLocal]]); above it NOTHING is collected to
     * the driver — k-sampled Brandes runs as level-synchronous multi-source
     * BFS + backward dependency accumulation, all shuffle-on-(source, vertex)
     * DataFrame joins ([[betweennessDistributed]]).
@@ -419,52 +319,39 @@ object Centrality {
       edges: DataFrame,
       normalized: Boolean = true,
       sampleSources: Option[Int] = None,
-      localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
-    val n = vertices.count()
-    if (n <= localCutoff) betweennessLocal(vertices, edges, normalized, sampleSources)
-    else betweennessDistributed(vertices, edges, normalized,
-      sampleSources.getOrElse(64), n)
-  }
+      localCutoff: Long = graft.Limits.dimensionRows): DataFrame =
+    LocalGraph(vertices, edges, localCutoff) match {
+      case Some(g) => betweennessLocal(g, normalized, sampleSources)
+      case None => betweennessDistributed(vertices, edges, normalized,
+        sampleSources.getOrElse(64), vertices.count())
+    }
 
   private def betweennessLocal(
-      vertices: DataFrame,
-      edges: DataFrame,
+      g: LocalGraph,
       normalized: Boolean,
       sampleSources: Option[Int]): DataFrame = {
-    val spark = vertices.sparkSession
-    import spark.implicits._
-
-    val ids = vertices.select($"id").as[String].collect().sorted
-    val idIndex = ids.zipWithIndex.toMap
-    val nV = ids.length
-    val adjPairs = edges.select($"src", $"dst").as[(String, String)].collect()
+    val nV = g.n
     val adjArr: Array[Array[Int]] = {
       val tmp = Array.fill(nV)(mutable.ArrayBuffer.empty[Int])
-      adjPairs.foreach { case (s, d) =>
-        (idIndex.get(s), idIndex.get(d)) match {
-          case (Some(si), Some(di)) => tmp(si) += di
-          case _ =>
-        }
-      }
+      g.internal.foreach { case (s, d) => tmp(s) += d }
       tmp.map(_.toArray.sorted)
     }
-    val bcAdj = spark.sparkContext.broadcast(adjArr)
-    val bcIds = spark.sparkContext.broadcast(ids)
+    val bcAdj = g.spark.sparkContext.broadcast(adjArr)
 
     val sources: Seq[Int] = sampleSources match {
       case Some(k) if k < nV =>
         // same hash-mod rule as [[sampleSourceIds]] so the distributed twin
         // picks the identical source set (AnalyticsSpec asserts 1e-9 parity)
         val step = math.max(1L, nV.toLong / k)
-        val sel = (0 until nV).filter(i => graft.expr.Hash60.h60(ids(i)) % step == 0)
-        if (sel.nonEmpty) sel
-        else Seq((0 until nV).minBy(i => graft.expr.Hash60.h60(ids(i))))
+        val hash = (0 until nV).map(i => graft.expr.Hash60.h60(g.ids(i).toString))
+        val sel = (0 until nV).filter(i => hash(i) % step == 0)
+        if (sel.nonEmpty) sel else Seq((0 until nV).minBy(hash))
       case _ => 0 until nV
     }
     val scale = nV.toDouble / sources.size
 
-    val partials = spark.sparkContext
-      .parallelize(sources, math.min(sources.size, 256))
+    val partials = g.spark.sparkContext
+      .parallelize(sources, math.max(1, math.min(sources.size, 256)))
       .mapPartitions { srcIter =>
         val adj = bcAdj.value
         val n = adj.length
@@ -498,10 +385,7 @@ object Centrality {
 
     val denom =
       if (normalized && nV > 2) (nV - 1).toDouble * (nV - 2) else 1.0
-    val rows = bcIds.value.indices.map { i =>
-      (bcIds.value(i), partials(i) * scale / denom)
-    }
-    spark.createDataFrame(rows).toDF("id", "betweenness")
+    g.frame(("betweenness", DoubleType, i => partials(i) * scale / denom))
   }
 
   /** Deterministic sort-free source sample shared by both Brandes paths:

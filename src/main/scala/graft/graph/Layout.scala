@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FreshCheckpoint
+import org.apache.spark.sql.types.DoubleType
 
 /** Force-directed layout (SURVEY §2 G10): the reference renders with
   * `nx.draw_spring` (`grapher.py:166-168`) and a client-side force simulation
@@ -84,27 +85,26 @@ object Layout {
 
   /** Spring layout to `iterations` rounds. Returns (id, x, y) — positions on
     * the unit-square scale (unclamped; consumers normalize for display).
-    *
-    * Adaptive like the other iterative graph ops: at dimension scale
-    * (≤ [[graft.Limits.dimensionRows]] vertices) the rounds run on collected
-    * arrays — ten distributed rounds of checkpointed joins on a 30-node
-    * graph are pure stage scheduling — with the identical arithmetic
-    * (same formulas, same per-round HALF_UP 9-decimal rounding Spark's
-    * `round` applies), so both paths and the SQL oracle agree. */
+    * A graph within `localCutoff` runs its rounds on a [[LocalGraph]] — ten
+    * distributed rounds of checkpointed joins on a 30-node graph are pure
+    * stage scheduling — with the identical arithmetic (same formulas, same
+    * per-round HALF_UP 9-decimal rounding Spark's `round` applies), so both
+    * paths and the SQL oracle agree. */
   def fruchtermanReingold(
       vertices: DataFrame,
       edges: DataFrame,
       iterations: Int = 50,
       t0: Double = 0.1,
       localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
-    val n = vertices.count()
-    require(n > 0, "layout of an empty graph")
-    val k = math.sqrt(1.0 / n)
     val und = edges.select(col("src").as("u"), col("dst").as("v"))
       .unionByName(edges.select(col("dst").as("u"), col("src").as("v")))
       .filter(col("u") =!= col("v")).distinct()
-    if (n <= localCutoff)
-      return layoutLocal(vertices, und, iterations, t0, k)
+    val local = LocalGraph(vertices,
+      und.select(col("u").as("src"), col("v").as("dst")), localCutoff)
+    val n = local.fold(vertices.count())(_.n.toLong)
+    require(n > 0, "layout of an empty graph")
+    val k = math.sqrt(1.0 / n)
+    if (local.isDefined) return layoutLocal(local.get, iterations, t0, k)
     var pos = FreshCheckpoint(initialPositions(vertices))
     for (i <- 1 to iterations) {
       val t = t0 * (iterations - i + 1).toDouble / iterations
@@ -127,24 +127,19 @@ object Layout {
     pos
   }
 
-  /** Driver-local rounds (n ≤ threshold): same trajectory as the
-    * distributed loop. Per-round 9-dp rounding makes summation-order ulp
-    * noise vanish before it can diverge paths, exactly as it does between
-    * the Spark and DuckDB evaluations. */
-  private def layoutLocal(vertices: DataFrame, und: DataFrame,
-      iterations: Int, t0: Double, k: Double): DataFrame = {
-    val spark = vertices.sparkSession
+  /** Driver-local rounds: same trajectory as the distributed loop.
+    * Per-round 9-dp rounding makes summation-order ulp noise vanish before
+    * it can diverge paths, exactly as it does between the Spark and DuckDB
+    * evaluations. */
+  private def layoutLocal(g: LocalGraph, iterations: Int, t0: Double,
+      k: Double): DataFrame = {
     val cut = 2 * k
     // Spark round() semantics: decimal HALF_UP at scale 9
     def r9(v: Double): Double =
       BigDecimal(v).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val ids = vertices.select(col("id")).collect().map(_.get(0)).toIndexedSeq
-    val idx = ids.zipWithIndex.toMap
-    val es = und.select(col("u"), col("v")).collect()
-      .flatMap(r => (idx.get(r.get(0)), idx.get(r.get(1))) match {
-        case (Some(a), Some(b)) => Some((a, b)); case _ => None
-      })
-    val m = ids.length
+    val ids = g.ids
+    val es = g.internal
+    val m = g.n
     val x = Array.tabulate(m)(i => r9(graft.expr.Hash60.h01(s"${ids(i)}:x")))
     val y = Array.tabulate(m)(i => r9(graft.expr.Hash60.h01(s"${ids(i)}:y")))
     for (it <- 1 to iterations) {
@@ -183,11 +178,6 @@ object Layout {
         i += 1
       }
     }
-    val rows = ids.indices.map(i => org.apache.spark.sql.Row(ids(i), x(i), y(i)))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", vertices.schema("id").dataType),
-      org.apache.spark.sql.types.StructField("x", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("y", org.apache.spark.sql.types.DoubleType)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    g.frame(("x", DoubleType, i => x(i)), ("y", DoubleType, i => y(i)))
   }
 }

@@ -243,7 +243,7 @@ object Pipeline {
   def releaseLedger(snap: DataFrame): DataFrame =
     snap.select(col("doc_id"), md5(col("text")).as("text_hash"),
       TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-      TrainingData.h60(concat(lit("r:"), col("doc_id").cast("string"),
+      graft.expr.Hash60.h60Col(concat(lit("r:"), col("doc_id").cast("string"),
         lit(":"), md5(col("text")))).as("h"))
 
   /** Verified near-dup pairs from an existing signature table — the

@@ -132,7 +132,7 @@ object Preference {
   def positionBias(docs: DataFrame): DataFrame = {
     val comps = comparisons(docs)
       .withColumn("a_shown_first",
-        pmod(TrainingData.h60(concat(lit("pos:"),
+        pmod(graft.expr.Hash60.h60Col(concat(lit("pos:"),
           col("a_id").cast("string"), lit(":"),
           col("b_id").cast("string"))), lit(2L)) === 0L)
     // one row per (comparison, participating source) with that source's

@@ -203,7 +203,7 @@ object Privacy {
     val names = classes.columns.dropRight(1)
     val key = concat_ws(":", lit("dp") +:
       names.map(n => coalesce(col(n).cast("string"), lit("null"))): _*)
-    val u = pmod(TrainingData.h60(key), lit(1000000L))
+    val u = pmod(graft.expr.Hash60.h60Col(key), lit(1000000L))
     val noise = geometricThresholds(maxNoise).init
       .foldRight(lit(maxNoise.toLong): Column) { case ((t, z), acc) =>
         when(u < t, z.toLong).otherwise(acc)

@@ -705,7 +705,7 @@ object TextAnalysis {
     */
   def domainShift(docs: DataFrame, trainPct: Int = 80,
       valPct: Int = 10): DataFrame = {
-    val bucket = TrainingData.h60(col("doc_id").cast("string")) % 100
+    val bucket = graft.expr.Hash60.h60Col(col("doc_id").cast("string")) % 100
     val sided = Dedup.fanOut(docs).select(col("doc_id"), col("source"),
         col("text"),
         when(bucket < trainPct, "train")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expr.Hash60.h60Col
+
 /** Training-corpus assembly operators: the deterministic sampling / splitting
   * / packing steps between a cleaned document table and an LLM training run.
   * Everything is content-hash driven (md5) — no RNG state, so results are
@@ -13,16 +15,12 @@ import org.apache.spark.sql.functions._
   */
 object TrainingData {
 
-  /** Non-negative 60-bit integer from the first 15 hex digits of md5. */
-  private[graft] def h60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
   /** Deterministic train/val/test assignment by content hash: bucket =
     * h(doc_id) mod 100, split at `trainPct` / `trainPct + valPct`. Pure
     * per-row projection — embarrassingly parallel, no shuffle, and stable
     * when the corpus grows (a doc never changes split). */
   def hashSplit(docs: DataFrame, trainPct: Int = 80, valPct: Int = 10): DataFrame = {
-    val bucket = h60(col("doc_id").cast("string")) % 100
+    val bucket = h60Col(col("doc_id").cast("string")) % 100
     docs.select(col("doc_id"), col("lang"),
       when(bucket < trainPct, "train")
         .when(bucket < trainPct + valPct, "val")
@@ -46,7 +44,7 @@ object TrainingData {
     val vertices = docs.select(col("doc_id").as("id"))
     val comps = graft.graph.Analytics.connectedComponents(
       vertices, nearDupPairs.select(col("a").as("src"), col("b").as("dst")))
-    val bucket = h60(col("cluster").cast("string")) % 100
+    val bucket = h60Col(col("cluster").cast("string")) % 100
     comps.select(col("id").as("doc_id"), col("component").as("cluster"))
       .select(col("doc_id"), col("cluster"),
         when(bucket < trainPct, "train")
@@ -137,7 +135,7 @@ object TrainingData {
     val assign = docs.select(col("doc_id"),
         explode(expr(s"sequence(0, ${rounds - 1})")).as("r"))
       .select(col("doc_id"), col("r"),
-        (h60(concat(col("doc_id").cast("string"), lit(":"), col("r"))) % buckets)
+        (h60Col(concat(col("doc_id").cast("string"), lit(":"), col("r"))) % buckets)
           .as("bucket"))
     val pairs = assign.as("x").join(assign.as("y"),
         col("x.r") === col("y.r") && col("x.bucket") === col("y.bucket") &&
@@ -335,7 +333,7 @@ object TrainingData {
     * @return (doc_id, weight, samp_key) — top `k` by (key desc, doc_id)
     */
   def weightedSample(docs: DataFrame, k: Int = 500): DataFrame = {
-    val u = (h60(col("doc_id").cast("string")) + 1).cast("double") /
+    val u = (h60Col(col("doc_id").cast("string")) + 1).cast("double") /
       lit(1152921504606846976.0) // 2^60
     val w = log(lit(1.0) + col("n_chars"))
     docs.filter(col("n_chars") >= 1)
@@ -632,7 +630,7 @@ object TrainingData {
         col("doc_id"), toks.as("n_tokens"))
       .withColumn("bin",
         floor(coalesce(sum(col("n_tokens")).over(w), lit(0L)) / budget))
-      .withColumn("h", h60(concat(lit("m:"), col("doc_id").cast("string"))))
+      .withColumn("h", h60Col(concat(lit("m:"), col("doc_id").cast("string"))))
       .groupBy(col(partCol), col("shard"), col("bin"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("sum_tokens"),
         expr("bit_xor(h)").as("digest"),
@@ -1267,7 +1265,7 @@ object TrainingData {
       .select(col("doc_id"), col("source"),
         coalesce(col("n_feats"), lit(0L)).as("n_feats"),
         coalesce(col("w_u"), lit(0L)).as("w_u"))
-    val u = (pmod(h60(concat(lit("dsir:"), col("doc_id").cast("string"))),
+    val u = (pmod(h60Col(concat(lit("dsir:"), col("doc_id").cast("string"))),
       lit(1000000L)).cast("double") + 0.5d) / 1000000d
     val gumbelU = floor(-log(-log(u)) * 1000000).cast("long")
     anchored.withColumn("key_u", col("w_u") + gumbelU)
@@ -1847,10 +1845,10 @@ object TrainingData {
     val key = concat(col("doc_id").cast("string"), lit(":"),
       col("blk").cast("string"))
     val spans = blocks
-      .filter(pmod(h60(concat(lit("span:"), key)), lit(100L)) <
+      .filter(pmod(h60Col(concat(lit("span:"), key)), lit(100L)) <
         noisePct.toLong)
       .select(col("doc_id"),
-        (col("blk") * block + pmod(h60(concat(lit("spanpos:"), key)),
+        (col("blk") * block + pmod(h60Col(concat(lit("spanpos:"), key)),
           lit((block - span + 1).toLong))).as("span_start"))
     val perDoc = spans.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_spans"), min(col("span_start")).as("first_span"))

@@ -42,7 +42,7 @@ object ManifestStream {
       floor(col("doc_id") / shardDocs).cast("long").as("shard"),
       col("doc_id"),
       TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-      TrainingData.h60(concat(lit("m:"), col("doc_id").cast("string")))
+      graft.expr.Hash60.h60Col(concat(lit("m:"), col("doc_id").cast("string")))
         .as("h"))
 
   private def digest(rows: DataFrame): DataFrame =

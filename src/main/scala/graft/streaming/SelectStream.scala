@@ -24,7 +24,7 @@ case class GateRow(doc_id: Long, source: String, n_feats: Long, w_u: Long,
   * Exactness: the λ table precomputes the same difference-of-floors µ-nat
   * log ratios as the engine plan (`java.lang.Math.log` is the engine's
   * own ln), the md5-derived bucket hash is bit-identical to
-  * [[graft.ops.TrainingData.h60]], and the per-doc weight is an integer
+  * its batch twin, [[graft.expr.Hash60.h60Col]], and the per-doc weight is an integer
   * sum — the StreamingSpec-style proof asserts stream ≡ batch row-for-row
   * against the dsirGate relation.
   */
@@ -50,12 +50,6 @@ object SelectStream {
     (tab, lr - lt)
   }
 
-  private def h60(s: String): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.take(15), 16)
-  }
-
   def gateStream(spark: SparkSession, docs: DataFrame,
       lambda: Map[Long, Long], lambdaDefault: Long, buckets: Int,
       thresholdU: Long = 0L): Dataset[GateRow] = {
@@ -74,7 +68,7 @@ object SelectStream {
         bigrams.foreach { bg =>
           // h60 is 60-bit (15 hex chars) → always non-negative; plain %
           // equals the engine side's pmod
-          val b = h60(bg) % buckets.toLong
+          val b = graft.expr.Hash60.h60(bg) % buckets.toLong
           w += lambda.getOrElse(b, lambdaDefault)
         }
         GateRow(e.doc_id, e.source, bigrams.length.toLong, w,

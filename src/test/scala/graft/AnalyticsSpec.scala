@@ -17,7 +17,8 @@ import graft.graph.{Analytics, Centrality, Community, Subgraph}
   * (modularity, eigenvector convergence) read the reference export through
   * [[Fixtures.reference]], so a missing checkout cancels them. The
   * local-vs-distributed agreement tests (connected components, sampled
-  * betweenness, PageRank, personalized PageRank) assert what every graph
+  * betweenness, eigenvector, fixed-round power iteration, PageRank,
+  * personalized PageRank) assert what every graph
   * satisfies: they run on the synthetic export's h3 around
   * [[SyntheticExport.hub]], and on the reference h3 around 40377 where the
   * checkout is present.
@@ -205,13 +206,12 @@ class AnalyticsSpec extends SparkTestBase {
     val vs = spark.range(n).toDF("id")
     val es = spark.range(n - 1)
       .select(col("id").as("src"), (col("id") + 1).as("dst"))
-    // id comes back as string from the local path (string-keyed adjacency)
-    // and as long from the distributed one — compare on the string form
-    val local = Centrality.betweenness(vs, es, sampleSources = Some(2 * n))
-      .collect().map(r => r.get(0).toString -> r.getDouble(1)).toMap
-    val dist = Centrality.betweenness(vs, es, sampleSources = Some(2 * n),
+    val localDf = Centrality.betweenness(vs, es, sampleSources = Some(2 * n))
+    val distDf = Centrality.betweenness(vs, es, sampleSources = Some(2 * n),
       localCutoff = 0)
-      .collect().map(r => r.get(0).toString -> r.getDouble(1)).toMap
+    assert(localDf.schema === distDf.schema)
+    val local = localDf.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val dist = distDf.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(dist.keySet === local.keySet)
     assert(local.values.exists(_ > 0.0), "path interior has positive bc")
     local.foreach { case (id, v) =>
@@ -224,43 +224,74 @@ class AnalyticsSpec extends SparkTestBase {
   }
 
   test("eigenvector converges on an undirected view and is L2-normalized") {
-    val und = h3._2.select(col("src"), col("dst"))
-      .unionByName(h3._2.select(col("dst").as("src"), col("src").as("dst")))
+    val und = undirected(h3._2)
     val r = Centrality.eigenvector(h3._1, und, maxIter = 200)
     assert(r.isDefined)
     val norm = r.get.agg(sum(col("score") * col("score"))).head().getDouble(0)
     assert(math.abs(norm - 1.0) < 1e-6)
   }
 
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
+
   test("eigenvector: distributed join-loop path agrees with the local path") {
-    val und = h3._2.select(col("src"), col("dst"))
-      .unionByName(h3._2.select(col("dst").as("src"), col("src").as("dst")))
-    val local = Centrality.eigenvector(h3._1, und, maxIter = 300).get
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val dist = Centrality.eigenvector(h3._1, und, maxIter = 300, localCutoff = 0).get
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(dist.keySet === local.keySet)
-    local.foreach { case (id, v) =>
-      assert(math.abs(dist(id) - v) < 1e-4, s"score mismatch at $id: ${dist(id)} vs $v")
+    eachH3 { h3 =>
+      val und = undirected(h3._2)
+      val local = Centrality.eigenvector(h3._1, und, maxIter = 300)
+      assert(local.isDefined, "the local power iteration converges")
+      val dist = Centrality.eigenvector(h3._1, und, maxIter = 300, localCutoff = 0)
+      assert(dist.isDefined, "the distributed power iteration converges")
+      val l = local.get.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      val d = dist.get.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(d.keySet === l.keySet)
+      l.foreach { case (id, v) =>
+        assert(math.abs(d(id) - v) < 1e-4, s"score mismatch at $id: ${d(id)} vs $v")
+      }
     }
   }
 
   test("powerIterationFixed: distributed path agrees with local; tracks eigenvector") {
-    val und = h3._2.select(col("src"), col("dst"))
-      .unionByName(h3._2.select(col("dst").as("src"), col("src").as("dst")))
-    val local = Centrality.powerIterationFixed(h3._1, und, 40)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val dist = Centrality.powerIterationFixed(h3._1, und, 40, localCutoff = 0)
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    assert(dist.keySet === local.keySet)
-    local.foreach { case (id, v) =>
-      assert(math.abs(dist(id) - v) < 1e-9, s"score mismatch at $id: ${dist(id)} vs $v")
+    eachH3 { h3 =>
+      val und = undirected(h3._2)
+      val local = Centrality.powerIterationFixed(h3._1, und, 40)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      val dist = Centrality.powerIterationFixed(h3._1, und, 40, localCutoff = 0)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      assert(dist.keySet === local.keySet)
+      local.foreach { case (id, v) =>
+        assert(math.abs(dist(id) - v) < 1e-9, s"score mismatch at $id: ${dist(id)} vs $v")
+      }
+      // fixed-round iterate approximates the converged eigenvector
+      val eig = Centrality.eigenvector(h3._1, und, maxIter = 300)
+      assert(eig.isDefined, "the local power iteration converges")
+      val e = eig.get.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      local.foreach { case (id, v) =>
+        assert(math.abs(e(id) - v) < 1e-3, s"drift vs eigenvector at $id")
+      }
     }
-    // fixed-round iterate approximates the converged eigenvector
-    val eig = Centrality.eigenvector(h3._1, und, maxIter = 300).get
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    local.foreach { case (id, v) =>
-      assert(math.abs(eig(id) - v) < 1e-3, s"drift vs eigenvector at $id")
+  }
+
+  test("graph operators return an empty frame for an empty graph on both paths") {
+    import spark.implicits._
+    val vs = Seq.empty[String].toDF("id")
+    val es = Seq.empty[(String, String)].toDF("src", "dst")
+    def empty(df: DataFrame, cols: String*): Unit = {
+      assert(df.columns.toSeq === "id" +: cols)
+      assert(df.isEmpty)
+    }
+    Seq(graft.Limits.dimensionRows, 0L).foreach { cutoff =>
+      withClue(s"localCutoff = $cutoff: ") {
+        empty(Analytics.connectedComponents(vs, es, cutoff), "component")
+        val eig = Centrality.eigenvector(vs, es, localCutoff = cutoff)
+        assert(eig.isDefined, "an empty graph converges")
+        empty(eig.get, "score")
+        empty(Centrality.powerIterationFixed(vs, es, 5, cutoff), "score")
+        empty(Centrality.pageRank(vs, es, localCutoff = cutoff), "score")
+        empty(Centrality.personalizedPageRank(vs, es, vs, localCutoff = cutoff),
+          "score")
+        empty(Centrality.betweenness(vs, es, localCutoff = cutoff), "betweenness")
+      }
     }
   }
 
