@@ -1,8 +1,9 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.FreshCheckpoint
+import org.apache.spark.sql.types.LongType
 
 /** Whole-graph analytics (`utils/analyze.py`), DataFrame-native.
   *
@@ -128,19 +129,14 @@ object Analytics {
   /** Component size histogram + category summary (`utils/analyze.py:15-72`).
     * Buckets: isolated=1, XS 2-5, S 6-20, M 21-100, L 101-1000, XL >1000.
     */
-  def bucketExpr(sizeCol: Column): Column =
-    when(sizeCol === 1, "isolated")
-      .when(sizeCol <= 5, "XS")
-      .when(sizeCol <= 20, "S")
-      .when(sizeCol <= 100, "M")
-      .when(sizeCol <= 1000, "L")
-      .otherwise("XL")
-
   def componentSummary(components: DataFrame): DataFrame = {
-    val sizes = components.groupBy(col("component")).agg(count(lit(1)).as("size"))
-    sizes.withColumn("bucket", bucketExpr(col("size")))
+    val size = col("size")
+    components.groupBy(col("component")).agg(count(lit(1)).as("size"))
+      .withColumn("bucket", when(size === 1, "isolated").when(size <= 5, "XS")
+        .when(size <= 20, "S").when(size <= 100, "M").when(size <= 1000, "L")
+        .otherwise("XL"))
       .groupBy(col("bucket"))
-      .agg(sum(col("size")).as("nodes"), count(lit(1)).as("components"))
+      .agg(sum(size).as("nodes"), count(lit(1)).as("components"))
   }
 
   /** Reference size taxonomy for the component_info listing artifact
@@ -288,101 +284,91 @@ object Analytics {
       .agg(avg(col("bf")).as("mean_branching_factor"))
   }
 
-  /** Global triangle count over an undirected graph given as canonical
-    * edges (a, b) with a < b, via degree orientation: each edge is directed
-    * from its lower-(degree, id) endpoint to the higher one, wedges are
-    * enumerated from each node's out-neighbors, and a wedge closes iff the
-    * canonical edge between its two endpoints exists. Orientation bounds the
-    * wedge relation by O(m^1.5) regardless of degree skew — the id-ordered
-    * variant explodes on a single high-degree hub (a node in m edges yields
-    * C(m,2) wedges), which is exactly the shape a 100 TB co-occurrence graph
-    * has. Two shuffle joins; the count is algorithm-independent, so the
-    * oracle can replay it with the naive ordered 3-way self-join.
+  /** The canonical edge set (a < b) as longs, materialized once: the
+    * triangle family and the peeling loops rescan it. */
+  private def canonical(edges: DataFrame): DataFrame = FreshCheckpoint(
+    edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b")))
+
+  /** The degree-oriented adjacency under the triangle family
+    * ([[triangleCount]], [[localClustering]], [[kTruss]]). Each canonical
+    * edge of `e` runs from its lower-(degree, id) endpoint to the higher:
+    * an acyclic orientation, so a triangle {u, v, w} has one source u with
+    * u→v, u→w, v→w, and w ∈ N⁺(u) ∩ N⁺(v) on exactly one of its edges.
+    * Out-degrees are O(√m), so the work is O(m^1.5) whatever the skew (the
+    * worst-case-optimal triangle bound; id order gives a hub in m edges
+    * C(m,2) wedges). No wedge relation is built: each oriented edge carries
+    * both endpoints' sorted out-neighbor arrays for the caller to intersect.
     *
-    * @return single row (n_triangles).
+    * The four attaches (degree onto both endpoints, adjacency onto both)
+    * join node-sized relations onto the edge stream with no hint: the
+    * planner sizes them from the checkpointed relations and AQE re-plans at
+    * run time. Measured on q90 (local[4], 4 shuffle partitions, two runs
+    * each, interleaved and order-swapped) against the degree-count gate
+    * this replaced (broadcast up to `Limits.dimensionRows` vertices, else a
+    * `shuffle_hash` pin) and an unconditional `shuffle_hash` pin:
+    *  - sf0.1: no hint 2.20/2.22 s, 14 jobs, 30 MB shuffled; gate
+    *    2.44/2.45 s, 13 jobs, 9 MB; pin 3.19/3.75 s, 15 jobs, 324 MB.
+    *  - sf1 (10× ScaleUp): no hint 35.7/39.5 s, 15 jobs, 0.78 GB shuffled
+    *    and 3.47 GB spilled by the sort-merge attach of the adjacency
+    *    arrays; gate (pinned there) 38.7/38.9 s, 17 jobs, 3.23 GB, no
+    *    spill; pin 28.3/30.2 s, 15 jobs, no spill.
+    * The pin also costs jobs at every scale, since a shuffled hash join
+    * runs both sides as stages where a broadcast runs one: at sf0.001 q90
+    * ran 15 jobs pinned against 11 with no hint, q109 17 against 13 and
+    * q180 38 against 28.
+    *
+    * @return (deg(id, deg) over the endpoints of `e`, the oriented edges
+    *         (src, dst, nbrsA, nbrsB) with nbrsA = N⁺(src), nbrsB = N⁺(dst))
     */
-  def triangleCount(edges: DataFrame): DataFrame = {
-    // materialize once: the caller's edge relation (often a distinct over a
-    // self-join) feeds the degree build AND the orientation pass
-    val e = FreshCheckpoint(
-      edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b")))
-    // (deg, id) total order → acyclic orientation
+  private def orientedAdjacency(e: DataFrame): (DataFrame, DataFrame) = {
     val deg = FreshCheckpoint(
       e.select(col("a").as("id")).unionByName(e.select(col("b").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("deg")))
-    // deg and adj are node-sized; below the local threshold broadcast them
-    // so the edge relation is never shuffled for the attaches. On the scale
-    // path the attaches are shuffle joins on the node key — pinned to
-    // ShuffledHashJoin (build = the node-sized side, 1/parts of it per
-    // task) because the SortMergeJoin default SORTS the edge stream, and
-    // once edges carry adjacency-array payloads that sort spills: the sf1
-    // probe measured 38× at 10× data crossing the broadcast→shuffle flip,
-    // with the 6 GB payload sort as the dominant term.
-    val hint: DataFrame => DataFrame =
-      if (deg.count() <= graft.Limits.dimensionRows) broadcast(_) else _.hint("shuffle_hash")
-    val withDeg = e
-      .join(hint(deg.withColumnRenamed("id", "a").withColumnRenamed("deg", "da")), Seq("a"))
-      .join(hint(deg.withColumnRenamed("id", "b").withColumnRenamed("deg", "db")), Seq("b"))
-    val oriented = FreshCheckpoint(withDeg.select(
-      when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("src"), col("b").as("dst")))
-        .otherwise(struct(col("b").as("src"), col("a").as("dst"))).as("o"))
+    val oriented = FreshCheckpoint(e
+      .join(deg.select(col("id").as("a"), col("deg").as("da")), Seq("a"))
+      .join(deg.select(col("id").as("b"), col("deg").as("db")), Seq("b"))
+      .select(
+        when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
+          struct(col("a").as("src"), col("b").as("dst")))
+          .otherwise(struct(col("b").as("src"), col("a").as("dst"))).as("o"))
       .select(col("o.src").as("src"), col("o.dst").as("dst")))
-    // Per-edge merge-intersect of sorted out-adjacency (native codegen expr)
-    // instead of materializing the wedge relation: a triangle {u,v,w} in the
-    // orientation DAG has exactly one source u with u→v, u→w and the closing
-    // v→w, so Σ_{(u,v)} |N⁺(u) ∩ N⁺(v)| counts each triangle once. Work is
-    // O(Σ_edge (d⁺(u)+d⁺(v))) flat longs — the wedge-join form shuffled ~50M
-    // canonicalized wedge rows at sf0.1 (41 s); this runs in a few seconds.
-    // Orientation caps d⁺ at O(√m), so adjacency rows stay small even for
-    // hub nodes; the attach joins shuffle on src/dst like any payload attach.
     val adj = FreshCheckpoint(oriented.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("nbrs")))
-    oriented
-      .join(hint(adj.select(col("src"), col("nbrs").as("nbrsA"))), Seq("src"))
-      .join(hint(adj.select(col("src").as("dst"), col("nbrs").as("nbrsB"))), Seq("dst"))
-      .agg(coalesce(sum(graft.expr.VectorOps.sortedLongIntersect(
-        col("nbrsA"), col("nbrsB"))), lit(0L)).as("n_triangles"))
+    (deg, oriented
+      .join(adj.select(col("src"), col("nbrs").as("nbrsA")), Seq("src"))
+      .join(adj.select(col("src").as("dst"), col("nbrs").as("nbrsB")), Seq("dst")))
   }
 
+  /** Global triangle count over an undirected graph given as canonical
+    * edges (a, b) with a < b: Σ over oriented edges of |N⁺(u) ∩ N⁺(v)| on
+    * [[orientedAdjacency]], a native merge-intersect of sorted longs per
+    * edge. (The wedge-join form shuffled ~50M canonicalized wedge rows at
+    * sf0.1, 41 s; this runs in a few seconds.) The count is
+    * algorithm-independent, so the oracle can replay it with the naive
+    * ordered 3-way self-join.
+    *
+    * @return single row (n_triangles).
+    */
+  def triangleCount(edges: DataFrame): DataFrame =
+    orientedAdjacency(canonical(edges))._2
+      .agg(coalesce(sum(graft.expr.VectorOps.sortedLongIntersect(
+        col("nbrsA"), col("nbrsB"))), lit(0L)).as("n_triangles"))
+
   /** Per-vertex triangle counts and local clustering coefficients over an
-    * undirected graph given as canonical edges (a, b) with a < b. Same
-    * degree-orientation scheme as [[triangleCount]] (wedge work bounded by
-    * O(m^1.5) independent of skew), but each closing intersection is
-    * materialized as its element list so all THREE corners of a triangle can
-    * be credited: for an oriented edge (u, v), every w in N⁺(u) ∩ N⁺(v)
-    * closes {u, v, w}, crediting u, v and w once each. Intersections are
-    * computed per edge on sorted adjacency arrays (orientation caps their
-    * length at O(√m)); credits aggregate in one shuffle on the vertex id.
-    * cc = 2·t / (deg·(deg−1)) for deg ≥ 2, else 0.
+    * undirected graph given as canonical edges (a, b) with a < b. Each
+    * closing intersection on [[orientedAdjacency]] is materialized as its
+    * element list so all THREE corners of a triangle can be credited: for
+    * an oriented edge (u, v), every w in N⁺(u) ∩ N⁺(v) closes {u, v, w},
+    * crediting u, v and w once each; credits aggregate in one shuffle on
+    * the vertex id. cc = 2·t / (deg·(deg−1)) for deg ≥ 2, else 0.
     *
     * @return (id, deg, tri, cc) for every vertex of the edge set.
     */
   def localClustering(edges: DataFrame): DataFrame = {
-    val e = FreshCheckpoint(
-      edges.select(col("a").cast("long").as("a"), col("b").cast("long").as("b")))
-    val deg = FreshCheckpoint(
-      e.select(col("a").as("id")).unionByName(e.select(col("b").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("deg")))
-    // scale path pins ShuffledHashJoin for the same payload-sort reason as
-    // triangleCount (build side = node-sized relation / parts per task)
-    val hint: DataFrame => DataFrame =
-      if (deg.count() <= graft.Limits.dimensionRows) broadcast(_) else _.hint("shuffle_hash")
-    val withDeg = e
-      .join(hint(deg.select(col("id").as("a"), col("deg").as("da"))), Seq("a"))
-      .join(hint(deg.select(col("id").as("b"), col("deg").as("db"))), Seq("b"))
-    val oriented = FreshCheckpoint(withDeg.select(
-      when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("src"), col("b").as("dst")))
-        .otherwise(struct(col("b").as("src"), col("a").as("dst"))).as("o"))
-      .select(col("o.src").as("src"), col("o.dst").as("dst")))
-    val adj = FreshCheckpoint(oriented.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("nbrs")))
+    val (deg, oriented) = orientedAdjacency(canonical(edges))
     // third corners must be enumerated, not just counted → array_intersect
     // (sorted inputs; result size ≤ min degree of the edge's endpoints)
     val closing = FreshCheckpoint(oriented
-      .join(hint(adj.select(col("src"), col("nbrs").as("nbrsA"))), Seq("src"))
-      .join(hint(adj.select(col("src").as("dst"), col("nbrs").as("nbrsB"))), Seq("dst"))
       .select(col("src"), col("dst"),
         array_intersect(col("nbrsA"), col("nbrsB")).as("ws"))
       .filter(size(col("ws")) > 0))
@@ -403,9 +389,11 @@ object Analytics {
     * synchronous Bellman-Ford, a FIXED number of relaxation rounds
     * (deterministic — replayable round-by-round by the SQL oracle; pick
     * rounds ≥ the graph's weighted-hop diameter for exact distances).
-    * Below [[graft.Limits.dimensionRows]] collected vertices the rounds run on driver
-    * arrays (same semantics, no per-round stage scheduling); the distributed
-    * loop is one shuffle per round on (id) with [[FreshCheckpoint]].
+    * A graph within `localCutoff` runs the rounds on a [[LocalGraph]] of
+    * its edges, weights collected with them (same semantics, no per-round
+    * stage scheduling); the distributed loop is one shuffle per round on
+    * (id) with [[FreshCheckpoint]]. Both paths return bigint ids, and a
+    * source outside the graph as its only row (src, 0).
     *
     * @param edges directed (a, b, w); pass both directions for undirected.
     * @return (id, dist) for vertices reached within `rounds` relaxations.
@@ -414,39 +402,41 @@ object Analytics {
       localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val n = edges.select($"a".as("id"))
-      .unionByName(edges.select($"b".as("id"))).distinct().count()
-    if (n <= localCutoff) {
-      val es = edges.select($"a".cast("long"), $"b".cast("long"), $"w".cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      val dist = scala.collection.mutable.HashMap(src -> 0L)
-      for (_ <- 1 to rounds) {
-        val snap = dist.toMap // synchronous: round k+1 relaxes from round k
-        es.foreach { case (a, b, w) =>
-          snap.get(a).foreach { da =>
-            if (dist.get(b).forall(_ > da + w)) dist(b) = da + w }
+    val seed = spark.range(1).select(lit(src).as("id"), lit(0L).as("dist"))
+    LocalGraph.ofEdges(edges.select($"a".cast("long").as("src"),
+        $"b".cast("long").as("dst"), $"w".cast("long")), localCutoff) match {
+      case Some(g) => g.index.get(src).fold(seed) { s =>
+        val dist = Array.tabulate(g.n)(i => if (i == s) 0L else Long.MaxValue)
+        for (_ <- 1 to rounds) {
+          val snap = dist.clone() // synchronous: round k+1 relaxes from round k
+          g.src.indices.foreach { j =>
+            val da = snap(g.src(j))
+            if (da != Long.MaxValue && dist(g.dst(j)) > da + g.weight(j))
+              dist(g.dst(j)) = da + g.weight(j)
+          }
         }
+        g.frameAt(g.ids.indices.filter(dist(_) != Long.MaxValue))(("dist", LongType, dist(_)))
       }
-      dist.toSeq.toDF("id", "dist")
-    } else {
-      val e = FreshCheckpoint(edges.select($"a", $"b", $"w"))
-      var dist = spark.range(1).select(lit(src).as("id"), lit(0L).as("dist"))
-      for (_ <- 1 to rounds) {
-        val relax = dist.join(e, $"id" === $"a")
-          .select($"b".as("id"), ($"dist" + $"w").as("dist"))
-        dist = FreshCheckpoint(dist.unionByName(relax)
-          .groupBy($"id").agg(min($"dist").as("dist")))
-      }
-      dist
+      case None =>
+        val e = FreshCheckpoint(edges.select($"a", $"b", $"w"))
+        var dist = seed
+        for (_ <- 1 to rounds) {
+          val relax = dist.join(e, $"id" === $"a")
+            .select($"b".as("id"), ($"dist" + $"w").as("dist"))
+          dist = FreshCheckpoint(dist.unionByName(relax)
+            .groupBy($"id").agg(min($"dist").as("dist")))
+        }
+        dist
     }
   }
 
   /** k-core decomposition by synchronous peeling, a FIXED number of rounds
     * (deterministic and SQL-replayable, like [[sssp]]): each round removes
     * every vertex whose degree within the surviving subgraph is < k. With
-    * rounds ≥ the peel depth this is the exact k-core. Below
-    * [[graft.Limits.dimensionRows]] vertices the peel runs on collected driver arrays;
-    * the distributed loop is one degree-aggregation shuffle per round.
+    * rounds ≥ the peel depth this is the exact k-core. A graph within
+    * `localCutoff` peels on a [[LocalGraph]] of its distinct edges; the
+    * distributed loop is one degree-aggregation shuffle per round. Both
+    * paths keep `a`'s id type.
     *
     * @param edges undirected as directed-both-ways (a, b).
     * @return (id, deg) — survivors with their degree inside the final core.
@@ -455,51 +445,52 @@ object Analytics {
       localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    val und = FreshCheckpoint(edges.select($"a", $"b").distinct())
-    val n = und.select($"a".as("id")).distinct().count()
-    if (n <= localCutoff) {
-      val es = und.select($"a".cast("long"), $"b".cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      var alive = es.map(_._1).toSet ++ es.map(_._2)
-      for (_ <- 1 to rounds) {
-        val deg = scala.collection.mutable.HashMap.empty[Long, Long]
-        es.foreach { case (a, b) =>
-          if (alive(a) && alive(b)) deg(a) = deg.getOrElse(a, 0L) + 1L }
-        alive = alive.filter(v => deg.getOrElse(v, 0L) >= k)
-      }
-      val deg = scala.collection.mutable.HashMap.empty[Long, Long]
-      es.foreach { case (a, b) =>
-        if (alive(a) && alive(b)) deg(a) = deg.getOrElse(a, 0L) + 1L }
-      deg.toSeq.toDF("id", "deg")
-    } else {
-      // Delta peeling: removing a vertex only changes its NEIGHBORS'
-      // surviving degrees, so each round (a) drops sub-k vertices from the
-      // node-sized degree relation and (b) subtracts one per edge into the
-      // removed set — found with a single semi-join of the edge relation
-      // against the small, shrinking removed set (AQE broadcasts it when
-      // it fits, so the full edge relation is never reshuffled after the
-      // initial degree build). The previous form re-semi-joined all edges
-      // against the alive set twice per round — three full-edge shuffles a
-      // round, the cost the sf1 probe surfaced (36.8 s vs a sub-second
-      // local path at sf0.1). Synchronous-peel semantics are identical:
-      // removed_r = {v : deg_r(v) < k}, deg_{r+1} = induced degree after
-      // removal — by induction the same relation aliveDeg(alive_r)
-      // produced.
-      var deg = FreshCheckpoint(
-        und.groupBy($"a".as("id")).agg(count(lit(1)).as("deg")))
-      for (_ <- 1 to rounds) {
-        val removed = deg.filter($"deg" < k).select($"id")
-        val delta = und
-          .join(removed.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
-          .groupBy($"a".as("id")).agg(count(lit(1)).as("d"))
-        deg = FreshCheckpoint(
-          deg.join(removed, Seq("id"), "left_anti")
-            .join(delta, Seq("id"), "left")
-            .select($"id", ($"deg" - coalesce($"d", lit(0L))).as("deg")))
-      }
-      // the aliveDeg formulation emitted no row for a survivor whose last
-      // neighbor was peeled (no surviving edge to aggregate) — match it
-      deg.filter($"deg" > 0)
+    val distinctEdges = edges.select($"a", $"b").distinct()
+    LocalGraph.ofEdges(distinctEdges.select($"a".as("src"), $"b".as("dst")),
+        localCutoff) match {
+      case Some(g) =>
+        var alive = Array.fill(g.n)(true)
+        def degrees(): Array[Long] = {
+          val deg = new Array[Long](g.n)
+          g.src.indices.foreach(j => if (alive(g.src(j)) && alive(g.dst(j))) deg(g.src(j)) += 1L)
+          deg
+        }
+        for (_ <- 1 to rounds) {
+          val deg = degrees()
+          alive = Array.tabulate(g.n)(i => alive(i) && deg(i) >= k)
+        }
+        val deg = degrees()
+        g.frameAt(g.ids.indices.filter(deg(_) > 0))(("deg", LongType, deg(_)))
+      case None =>
+        // Delta peeling: removing a vertex only changes its NEIGHBORS'
+        // surviving degrees, so each round (a) drops sub-k vertices from the
+        // node-sized degree relation and (b) subtracts one per edge into the
+        // removed set — found with a single semi-join of the edge relation
+        // against the small, shrinking removed set (AQE broadcasts it when
+        // it fits, so the full edge relation is never reshuffled after the
+        // initial degree build). The previous form re-semi-joined all edges
+        // against the alive set twice per round — three full-edge shuffles a
+        // round, the cost the sf1 probe surfaced (36.8 s vs a sub-second
+        // local path at sf0.1). Synchronous-peel semantics are identical:
+        // removed_r = {v : deg_r(v) < k}, deg_{r+1} = induced degree after
+        // removal — by induction the same relation aliveDeg(alive_r)
+        // produced.
+        val und = FreshCheckpoint(distinctEdges)
+        var deg = FreshCheckpoint(
+          und.groupBy($"a".as("id")).agg(count(lit(1)).as("deg")))
+        for (_ <- 1 to rounds) {
+          val removed = deg.filter($"deg" < k).select($"id")
+          val delta = und
+            .join(removed.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
+            .groupBy($"a".as("id")).agg(count(lit(1)).as("d"))
+          deg = FreshCheckpoint(
+            deg.join(removed, Seq("id"), "left_anti")
+              .join(delta, Seq("id"), "left")
+              .select($"id", ($"deg" - coalesce($"d", lit(0L))).as("deg")))
+        }
+        // the aliveDeg formulation emitted no row for a survivor whose last
+        // neighbor was peeled (no surviving edge to aggregate) — match it
+        deg.filter($"deg" > 0)
     }
   }
 
@@ -515,9 +506,8 @@ object Analytics {
     * that adjacency row — per-walker step cost is O(1) rows regardless of
     * hub degree, shuffle-on-key all the way, O(steps) rounds.
     *
-    * Adaptive like the centralities: on dimension-sized LONG-id graphs
-    * (≤ [[graft.Limits.dimensionRows]] vertices) the walk runs on collected sorted
-    * adjacency arrays — identical md5 arithmetic, so results are
+    * A LONG-id graph within `localCutoff` walks on the sorted adjacency of
+    * its [[LocalGraph]] — identical md5 arithmetic, so results are
     * bit-identical to the distributed loop — because 2·steps join rounds of
     * stage scheduling dwarf the arithmetic there. Non-long id types always
     * take the distributed path (the local sort must reproduce Spark's
@@ -528,28 +518,12 @@ object Analytics {
     */
   def deterministicWalks(edges: DataFrame, steps: Int,
       localCutoff: Long = graft.Limits.dimensionRows): DataFrame = {
-    if (edges.schema("a").dataType == org.apache.spark.sql.types.LongType &&
-        edges.schema("b").dataType == org.apache.spark.sql.types.LongType) {
-      val und = edges.select(col("a"), col("b")).distinct()
-      // size gate on BOTH dimensions — a 65k-vertex graph can still carry
-      // billions of edges, so the vertex cutoff alone would not bound the
-      // driver materialization. r14: the gate and the collect share ONE
-      // pass — `take(edgeCap + 1)` materializes the distinct once and is
-      // itself the edge-count bound (take stops shipping at the cap, so
-      // an oversized graph never floods the driver; the old shape ran the
-      // full distinct TWICE, once under the gate aggregate and once under
-      // the collect). The vertex bound is then checked on the collected
-      // rows — same gate semantics, one distinct instead of two.
-      val edgeCap = 4000000
-      val rows = und.take(edgeCap + 1)
-      if (rows.length <= edgeCap) {
-        val pairs = rows.map(r => (r.getLong(0), r.getLong(1)))
-        if (pairs.iterator.map(_._1).toSet.size <= localCutoff)
-          return walksLocal(edges.sparkSession, pairs, steps)
-      }
-    }
+    val und = edges.select(col("a"), col("b")).distinct()
+    val local = if (Seq("a", "b").exists(edges.schema(_).dataType != LongType)) None
+      else LocalGraph.ofEdges(und.select(col("a").as("src"), col("b").as("dst")), localCutoff)
+    if (local.isDefined) return walksLocal(local.get, steps)
     val byA = org.apache.spark.sql.expressions.Window.partitionBy(col("a"))
-    val adj = FreshCheckpoint(edges.select(col("a"), col("b")).distinct()
+    val adj = FreshCheckpoint(und
       .withColumn("idx",
         (row_number().over(byA.orderBy(col("b"))) - 1).cast("long"))
       .withColumn("deg", count(lit(1)).over(byA).cast("long")))
@@ -582,16 +556,16 @@ object Analytics {
     paths
   }
 
-  /** Driver-local walks over collected sorted adjacency (long ids,
-    * n ≤ [[graft.Limits.dimensionRows]]): same md5(walker:s) % deg index arithmetic —
-    * `Long.parseLong(hex(md5)[0,15), 16)` ≡ `conv(substring(md5, 1, 15),
-    * 16, 10)` for 60-bit values — over the same ascending-neighbor order,
-    * so output is bit-identical to the distributed loop. */
-  private def walksLocal(spark: org.apache.spark.sql.SparkSession,
-      pairs: Array[(Long, Long)], steps: Int): DataFrame = {
-    import spark.implicits._
-    val adj = pairs.groupBy(_._1).map { case (a, es) =>
-      a -> es.map(_._2).sorted
+  /** Driver-local walks on a long-id [[LocalGraph]]: same md5(walker:s) %
+    * deg index arithmetic — `Long.parseLong(hex(md5)[0,15), 16)` ≡
+    * `conv(substring(md5, 1, 15), 16, 10)` for 60-bit values — over the
+    * same ascending-neighbor order, so output is bit-identical to the
+    * distributed loop. */
+  private def walksLocal(g: LocalGraph, steps: Int): DataFrame = {
+    import g.spark.implicits._
+    val id = g.ids.map(_.asInstanceOf[Long])
+    val adj = g.src.indices.groupBy(g.src(_)).map { case (s, js) =>
+      id(s) -> js.map(j => id(g.dst(j))).sorted
     }
     import graft.expr.Hash60.h60
     val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
@@ -624,28 +598,12 @@ object Analytics {
   }
 
   /** Per-edge triangle support over a canonical (a < b) undirected edge
-    * set: degree-oriented triangle ENUMERATION (each triangle surfaces once
-    * from its orientation source via a sorted-adjacency intersect, same
-    * O(m^1.5) bound as [[triangleCount]]), then each triangle credits its
-    * three canonical edges. The credit explode is output-sized (3 rows per
-    * triangle), never wedge-sized. */
+    * set: each triangle surfaces once from its orientation source on
+    * [[orientedAdjacency]], then credits its three canonical edges. The
+    * credit explode is output-sized (3 rows per triangle), never
+    * wedge-sized. */
   private def edgeSupport(e: DataFrame): DataFrame = {
-    val deg = FreshCheckpoint(
-      e.select(col("a").as("id")).unionByName(e.select(col("b").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("deg")))
-    val withDeg = e
-      .join(deg.withColumnRenamed("id", "a").withColumnRenamed("deg", "da"), Seq("a"))
-      .join(deg.withColumnRenamed("id", "b").withColumnRenamed("deg", "db"), Seq("b"))
-    val oriented = FreshCheckpoint(withDeg.select(
-      when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("src"), col("b").as("dst")))
-        .otherwise(struct(col("b").as("src"), col("a").as("dst"))).as("o"))
-      .select(col("o.src").as("src"), col("o.dst").as("dst")))
-    val adj = FreshCheckpoint(oriented.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("nbrs")))
-    val tri = oriented
-      .join(adj.select(col("src"), col("nbrs").as("nbrsA")), Seq("src"))
-      .join(adj.select(col("src").as("dst"), col("nbrs").as("nbrsB")), Seq("dst"))
+    val tri = orientedAdjacency(e)._2
       .select(col("src").as("u"), col("dst").as("v"),
         explode(array_intersect(col("nbrsA"), col("nbrsB"))).as("w"))
     tri.select(explode(array(
@@ -670,8 +628,7 @@ object Analytics {
     */
   def kTruss(edges: DataFrame, k: Int = 4, rounds: Int = 2): DataFrame = {
     require(rounds >= 1, s"kTruss needs rounds >= 1, got $rounds")
-    var e = FreshCheckpoint(edges.select(
-      col("a").cast("long").as("a"), col("b").cast("long").as("b")))
+    var e = canonical(edges)
     var result: DataFrame = null
     for (_ <- 1 to rounds) {
       // left join: edgeSupport only emits edges that lie in ≥1 triangle, so
@@ -709,8 +666,7 @@ object Analytics {
     */
   def densestSubgraph(edges: DataFrame, rounds: Int = 4): DataFrame = {
     require(rounds >= 1, s"densestSubgraph needs rounds >= 1, got $rounds")
-    var e = FreshCheckpoint(edges.select(
-      col("a").cast("long").as("a"), col("b").cast("long").as("b")))
+    var e = canonical(edges)
     var stats: DataFrame = null
     for (r <- 0 to rounds) {
       val deg = e.select(col("a").as("v")).unionByName(e.select(col("b").as("v")))

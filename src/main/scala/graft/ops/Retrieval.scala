@@ -371,7 +371,9 @@ object Retrieval {
     // scalars become one 4-row aggregate instead of |steps| driver actions.
     val spark = docs.sparkSession
     import spark.implicits._
-    val spine = broadcast(steps.map(_.toLong).toDF("step"))
+    val stepIds = steps.map(_.toLong).toDF("step")
+    // hinted only where cross-joined: a left join's preserved side never broadcasts
+    val spine = broadcast(stepIds)
     val survives = !(col("doc_id") % modRemove < col("step"))
     val isEdited = col("doc_id") % modBase < col("step")
     val maxStep = if (steps.isEmpty) 0L else steps.map(_.toLong).max
@@ -471,7 +473,7 @@ object Retrieval {
           .as("n_edited"),
         sum(when(col("doc_id") % modRemove < col("step"), 1L).otherwise(0L))
           .as("n_removed"))
-    spine.join(en, Seq("step"), "left")
+    stepIds.join(en, Seq("step"), "left")
       .join(eh, Seq("step"), "left")
       .join(gauge, Seq("step"), "left")
       .join(edited, Seq("step"), "left")

@@ -15,14 +15,6 @@ import org.apache.spark.sql.types._
   */
 object EventStreams {
 
-  val eventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** 5-minute tumbling-window counts+sums per event type. Works on both batch
     * and streaming inputs (add `withWatermark` upstream for streams). */
   def windowedAgg(events: DataFrame): DataFrame =
@@ -143,9 +135,4 @@ object EventStreams {
   def enrichStream(events: DataFrame, dim: DataFrame, dimKey: String,
       eventKey: String = "user_id"): DataFrame =
     enrichBatch(events, dim, dimKey, eventKey)
-
-  /** Read the events parquet as a stream (for tests/demo: availableNow over
-    * the static file). */
-  def readEventStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(eventSchema).parquet(dir)
 }

@@ -8,7 +8,7 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.etl.EntityBuilder
-import graft.graph.{Analytics, Centrality, Community, Subgraph}
+import graft.graph.{Analytics, Centrality, Community, LocalGraph, Subgraph}
 
 /** Graph analytics parity vs networkx goldens computed on the reference's own
   * entities output (fixtures in resources/golden/analytics.json).
@@ -291,8 +291,66 @@ class AnalyticsSpec extends SparkTestBase {
         empty(Centrality.personalizedPageRank(vs, es, vs, localCutoff = cutoff),
           "score")
         empty(Centrality.betweenness(vs, es, localCutoff = cutoff), "betweenness")
+        empty(Analytics.kcore(Seq.empty[(String, String)].toDF("a", "b"), k = 2,
+          rounds = 3, cutoff), "deg")
+        // the source is reached at distance 0 whatever the graph
+        val dist = Analytics.sssp(Seq.empty[(Long, Long, Long)].toDF("a", "b", "w"),
+          7L, rounds = 3, cutoff)
+        assert(dist.columns.toSeq === Seq("id", "dist"))
+        assert(dist.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((7L, 0L)))
+        val walks = Analytics.deterministicWalks(
+          Seq.empty[(Long, Long)].toDF("a", "b"), 3, cutoff)
+        assert(walks.columns.toSeq === Seq("walker", "step", "node"))
+        assert(walks.isEmpty)
       }
     }
+  }
+
+  test("a graph within the vertex cutoff but over the edge bound runs distributed, equal to local") {
+    import spark.implicits._
+    // K100 both ways: 100 vertices, 9,900 edges; edgeBound(100) = 6,100
+    val cutoff = 100L
+    val und = (for (a <- 0L until 100L; b <- 0L until 100L if a != b)
+      yield (a, b, (a + b) % 7 + 1)).toDF("a", "b", "w")
+    val vs = und.select(col("a").as("id")).distinct()
+    val es = und.select(col("a").as("src"), col("b").as("dst"))
+    assert(LocalGraph.edgeBound(cutoff) < 9900L)
+    assert(LocalGraph.ofEdges(es, cutoff).isEmpty)
+    assert(LocalGraph(vs, es, cutoff).isEmpty)
+    assert(LocalGraph.ofEdges(es, graft.Limits.dimensionRows).exists(_.n == 100))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString(",")).toSeq
+    assert(rows(Analytics.sssp(und, 0L, rounds = 3, cutoff)) ===
+      rows(Analytics.sssp(und, 0L, rounds = 3)))
+    assert(rows(Analytics.kcore(und, k = 50, rounds = 2, cutoff)) ===
+      rows(Analytics.kcore(und, k = 50, rounds = 2)))
+    assert(rows(Analytics.deterministicWalks(und, 3, cutoff)) ===
+      rows(Analytics.deterministicWalks(und, 3)))
+    assert(rows(Analytics.connectedComponents(vs, es, cutoff)) ===
+      rows(Analytics.connectedComponents(vs, es)))
+  }
+
+  test("edgeTypePairs counts each endpoint type pair of the synthetic export") {
+    val g = SyntheticExport.built
+    val types = g.entities.select("id", "type").collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val expected = g.edges.select("src", "dst").collect().toSeq
+      .flatMap(r => for (s <- types.get(r.getString(0)); d <- types.get(r.getString(1)))
+        yield (s, d))
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val got = Analytics.edgeTypePairs(g.edges, g.entities)
+      .select("srcType", "dstType", "n").collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(expected.nonEmpty)
+    assert(got === expected)
+  }
+
+  test("meanBranchingFactor is the mean commentary count of commented works") {
+    val g = SyntheticExport.built
+    val perWork = g.edges.filter(col("etype") === graft.model.Schemas.CommentaryOn)
+      .select("src").collect().toSeq.groupBy(_.getString(0)).values.map(_.size)
+    assert(perWork.nonEmpty)
+    val got = Analytics.meanBranchingFactor(g.edges).head().getDouble(0)
+    assert(math.abs(got - perWork.sum.toDouble / perWork.size) < 1e-12)
   }
 
   test("personalized pagerank: distributed path agrees with local; mass follows seeds") {

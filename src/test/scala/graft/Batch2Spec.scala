@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
 import graft.graph.Analytics
 import graft.ops.{BloomJoin, TextAnalysis}
@@ -12,20 +14,26 @@ class Batch2Spec extends SparkTestBase {
   import spark.implicits._
 
   test("triangle count: K4 has 4, C4 has 0; equals naive 3-join on a dense graph") {
-    val k4 = (for (a <- 0L to 3L; b <- 0L to 3L if a < b) yield (a, b)).toDF("a", "b")
-    assert(Analytics.triangleCount(k4).head().getLong(0) === 4L)
+    // twice: as planned, then with no automatic broadcast, so the attaches
+    // of the oriented adjacency run as shuffle joins
+    def check(): Unit = {
+      val k4 = (for (a <- 0L to 3L; b <- 0L to 3L if a < b) yield (a, b)).toDF("a", "b")
+      assert(Analytics.triangleCount(k4).head().getLong(0) === 4L)
 
-    val c4 = Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 3L)).toDF("a", "b")
-    assert(Analytics.triangleCount(c4).head().getLong(0) === 0L)
+      val c4 = Seq((0L, 1L), (1L, 2L), (2L, 3L), (0L, 3L)).toDF("a", "b")
+      assert(Analytics.triangleCount(c4).head().getLong(0) === 0L)
 
-    // deterministic pseudo-random graph incl. a hub (node 0 connected to all)
-    val rnd = (for (a <- 0L until 40L; b <- 0L until 40L
-      if a < b && (a == 0 || (a * 31 + b * 17) % 5 == 0)) yield (a, b)).toDF("a", "b")
-    val naive = rnd.as("e1")
-      .join(rnd.as("e2"), col("e2.a") === col("e1.b"))
-      .join(rnd.as("e3"), col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b"))
-      .count()
-    assert(Analytics.triangleCount(rnd).head().getLong(0) === naive)
+      // deterministic pseudo-random graph incl. a hub (node 0 connected to all)
+      val rnd = (for (a <- 0L until 40L; b <- 0L until 40L
+        if a < b && (a == 0 || (a * 31 + b * 17) % 5 == 0)) yield (a, b)).toDF("a", "b")
+      val naive = rnd.as("e1")
+        .join(rnd.as("e2"), col("e2.a") === col("e1.b"))
+        .join(rnd.as("e3"), col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b"))
+        .count()
+      assert(Analytics.triangleCount(rnd).head().getLong(0) === naive)
+    }
+    check()
+    withoutAutoBroadcast(check())
   }
 
   test("sssp: exact distances on a weighted path+shortcut; distributed equals local") {
@@ -42,7 +50,18 @@ class Batch2Spec extends SparkTestBase {
     val r1 = Analytics.sssp(e, 0L, rounds = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r1 === Map(0L -> 0L, 1L -> 5L, 3L -> 1L))
+    // int ids: both paths return the distributed path's schema (bigint ids)
+    val ei = e.select(col("a").cast("int").as("a"), col("b").cast("int").as("b"),
+      col("w").cast("int").as("w"))
+    val localI = Analytics.sssp(ei, 0L, rounds = 4)
+    val distI = Analytics.sssp(ei, 0L, rounds = 4, localCutoff = 0)
+    assert(fields(localI) === fields(distI))
+    assert(fields(distI) === Seq("id" -> LongType, "dist" -> LongType))
+    assert(localI.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap === local)
   }
+
+  private def fields(df: DataFrame): Seq[(String, DataType)] =
+    df.schema.map(f => f.name -> f.dataType)
 
   test("tfidf pairs: planted rare-term twins found; stopword-only overlap is not a pair") {
     val docs = Seq(
@@ -71,6 +90,13 @@ class Batch2Spec extends SparkTestBase {
     assert(dist === local)
     // 3-core of a triangle is empty
     assert(Analytics.kcore(und, k = 3, rounds = 4).count() === 0L)
+    // int ids: both paths keep the input's id type
+    val undI = und.select(col("a").cast("int").as("a"), col("b").cast("int").as("b"))
+    val localI = Analytics.kcore(undI, k = 2, rounds = 4)
+    val distI = Analytics.kcore(undI, k = 2, rounds = 4, localCutoff = 0)
+    assert(fields(localI) === fields(distI))
+    assert(fields(distI) === Seq("id" -> IntegerType, "deg" -> LongType))
+    assert(localI.collect().map(r => r.getInt(0).toLong -> r.getLong(1)).toMap === local)
   }
 
   test("lsh top-k: identical vectors share a bucket and rank first") {

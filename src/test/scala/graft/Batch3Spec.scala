@@ -12,13 +12,19 @@ class Batch3Spec extends SparkTestBase {
   test("localClustering: square with one diagonal") {
     // 1-2, 2-3, 3-4, 1-4, 1-3 → triangles {1,2,3} and {1,3,4}
     val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L), (1L, 3L)).toDF("a", "b")
-    val got = Analytics.localClustering(e)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
-      .toMap
-    assert(got(1L) === ((3L, 2L, 0.666667)))
-    assert(got(2L) === ((2L, 1L, 1.0)))
-    assert(got(3L) === ((3L, 2L, 0.666667)))
-    assert(got(4L) === ((2L, 1L, 1.0)))
+    // twice: as planned, then with no automatic broadcast, so the attaches
+    // of the oriented adjacency run as shuffle joins
+    def check(): Unit = {
+      val got = Analytics.localClustering(e)
+        .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3))))
+        .toMap
+      assert(got(1L) === ((3L, 2L, 0.666667)))
+      assert(got(2L) === ((2L, 1L, 1.0)))
+      assert(got(3L) === ((3L, 2L, 0.666667)))
+      assert(got(4L) === ((2L, 1L, 1.0)))
+    }
+    check()
+    withoutAutoBroadcast(check())
   }
 
   test("deterministicWalks: complete paths, every hop follows an edge, stable") {

@@ -15,10 +15,16 @@ class Round6Batch4Spec extends SparkTestBase {
     // triangle → peeled in round 1, and the K4 is unaffected in round 2.
     val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
     val pendant = Seq((4L, 5L), (4L, 6L), (5L, 6L))
-    val out = Analytics.kTruss((k4 ++ pendant).toDF("a", "b"), k = 4).collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(out.keySet === k4.toSet)
-    assert(out.values.forall(_ === 2L)) // inside K4 every edge has support 2
+    // twice: as planned, then with no automatic broadcast, so the attaches
+    // of the oriented adjacency run as shuffle joins
+    def check(): Unit = {
+      val out = Analytics.kTruss((k4 ++ pendant).toDF("a", "b"), k = 4).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+      assert(out.keySet === k4.toSet)
+      assert(out.values.forall(_ === 2L)) // inside K4 every edge has support 2
+    }
+    check()
+    withoutAutoBroadcast(check())
   }
 
   test("kTruss round-2 peeling catches edges whose support only drops after round 1") {
